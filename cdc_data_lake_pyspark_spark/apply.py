@@ -37,7 +37,6 @@ from __future__ import annotations
 import itertools
 import logging
 import os
-import shutil
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +45,7 @@ from pyspark.sql import types as T
 
 from cdc_data_lake_pyspark_spark.config import TableConfig
 from cdc_data_lake_pyspark_spark.schema import align_to_schema, merge_schemas
+from cdc_data_lake_pyspark_spark.store import recover_halfswap, replace_store
 
 logger = logging.getLogger(__name__)
 
@@ -504,6 +504,15 @@ class ParquetTableSink(TableSink):
     default ``write.merge.mode``, ``tables.json:6-8``).  On a real
     lakehouse the same pipeline calls a MERGE-capable sink with the SQL
     generated by :func:`build_merge_sql`/:func:`build_delete_sql`.
+
+    Each rewrite swaps the table by rename-aside
+    (:func:`~cdc_data_lake_pyspark_spark.store.replace_store`), Iceberg's
+    atomic snapshot swap in miniature: a crash at any point leaves the
+    full old or the full new table, and :meth:`exists`/:meth:`read`
+    repair a half-finished swap before they answer, so a replayed merge
+    or delete converges.  Appends are not guarded: replaying a batch
+    whose append already landed appends its rows again, so the insert
+    route stays at-least-once (as in the reference).
     """
 
     def __init__(self, root: str, continue_on_error: bool = False):
@@ -514,14 +523,18 @@ class ParquetTableSink(TableSink):
         return os.path.join(self.root, db, table)
 
     def exists(self, db, table):
-        return os.path.isdir(self._path(db, table))
+        path = self._path(db, table)
+        recover_halfswap(path)
+        return os.path.isdir(path)
 
     def read(self, spark, db, table):
-        return spark.read.parquet(self._path(db, table))
+        path = self._path(db, table)
+        recover_halfswap(path)
+        return spark.read.parquet(path)
 
     def create_if_not_exists(self, cfg, schema):
         path = self._path(cfg.db, cfg.table)
-        if not os.path.isdir(path):
+        if not self.exists(cfg.db, cfg.table):
             from cdc_data_lake_pyspark_spark.localrel import empty_frame
 
             spark = SparkSession.getActiveSession()
@@ -531,7 +544,7 @@ class ParquetTableSink(TableSink):
         def _do():
             path = self._path(cfg.db, cfg.table)
             spark = df.sparkSession
-            if os.path.isdir(path):
+            if self.exists(cfg.db, cfg.table):
                 base_schema = spark.read.parquet(path).schema
                 evolved = merge_schemas(base_schema, df.schema)
                 if [f.name for f in evolved.fields] != [
@@ -551,7 +564,7 @@ class ParquetTableSink(TableSink):
         def _do():
             path = self._path(cfg.db, cfg.table)
             spark = df.sparkSession
-            if not os.path.isdir(path):
+            if not self.exists(cfg.db, cfg.table):
                 df.write.mode("overwrite").parquet(path)
                 return
             base = spark.read.parquet(path)
@@ -569,7 +582,7 @@ class ParquetTableSink(TableSink):
     def delete(self, cfg, keys_df, ts_guard=None):
         def _do():
             path = self._path(cfg.db, cfg.table)
-            if not os.path.isdir(path):
+            if not self.exists(cfg.db, cfg.table):
                 return
             spark = keys_df.sparkSession
             base = spark.read.parquet(path)
@@ -582,10 +595,7 @@ class ParquetTableSink(TableSink):
 
     def _overwrite(self, df: DataFrame, path: str) -> None:
         # Copy-on-write without self-read hazard: write beside, then swap.
-        tmp = path + "._cow_tmp"
-        df.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(path, ignore_errors=True)
-        os.replace(tmp, path)
+        replace_store(path, df.write.mode("overwrite").parquet)
 
     def compact(self, db: str, table: str, target_files: int = 1) -> int:
         """Rewrite the table into ``target_files`` files and return the
@@ -595,7 +605,7 @@ class ParquetTableSink(TableSink):
         ``OPTIMIZE`` (the reference leaves this to the lakehouse).
         """
         path = self._path(db, table)
-        if not os.path.isdir(path):
+        if not self.exists(db, table):
             return 0
         before = len(
             [f for f in os.listdir(path) if f.endswith(".parquet")]

@@ -9,32 +9,44 @@ them from a small thread pool lets the later chain's tasks back-fill
 executors freed by the earlier chain's tail instead of paying the full
 serial sum of job walls + driver gaps.
 
-The same pattern `pipeline.CdcPipeline.apply_changes` has used for
-per-table applies since r8 — threads only drive job submission; the
-cluster still schedules the work.
+`pipeline.CdcPipeline.apply_changes` overlaps its per-table applies
+through the same pool — threads only drive job submission; the cluster
+still schedules the work.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
+import logging
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import SparkSession
 
+logger = logging.getLogger(__name__)
+
 
 def overlap_jobs(
-    spark: SparkSession, thunks: Sequence[Callable[[], object]]
+    spark: SparkSession,
+    thunks: Sequence[Callable[[], object]],
+    max_workers: Optional[int] = None,
 ) -> list:
-    """Run independent job-submitting thunks concurrently; return their
-    results in order.  All thunks are joined before returning; the first
-    exception in SUBMISSION order is re-raised after the join, so a
-    caller never observes a half-running overlap.
+    """Run independent job-submitting thunks concurrently, at most
+    ``max_workers`` at a time (default: all at once); return their
+    results in order.
+
+    Fail-fast like a serial loop, but safely: on the first failure,
+    thunks that have not started are cancelled (they must not commit
+    after the caller is told the work failed), thunks already running
+    are joined (none is still running when this returns or raises), any
+    other failure among them is logged as a WARNING, and the first
+    failure in SUBMISSION order is re-raised.
 
     Note the caller still owns rollback of any side effects a completed
     sibling thunk committed before the failure surfaced — wrap cleanup
     in try/finally at the call site."""
-    if len(thunks) <= 1:
+    workers = len(thunks) if max_workers is None else min(max_workers, len(thunks))
+    if workers <= 1:
         return [t() for t in thunks]
-    from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
     jspark = spark._jsparkSession
     jvm = spark._jvm
@@ -44,7 +56,9 @@ def overlap_jobs(
     # copied into each worker, or overlapped jobs lose their labels in
     # the UI/event log (ADVICE r16: profile_query's per-query stage
     # attribution silently excluded overlapped jobs).  Same clone/set
-    # pair pyspark.util.inheritable_thread_target uses.
+    # pair pyspark.util.inheritable_thread_target uses — one clone per
+    # thunk, since workers mutate their copy (job descriptions, SQL
+    # execution ids) concurrently.
     try:
         props = spark.sparkContext._jsc.sc().getLocalProperties().clone()
     except Exception:
@@ -56,12 +70,24 @@ def overlap_jobs(
         # works off-main-thread (the CdcPipeline discipline)
         jvm.SparkSession.setActiveSession(jspark)
         if props is not None:
-            spark.sparkContext._jsc.sc().setLocalProperties(props)
+            spark.sparkContext._jsc.sc().setLocalProperties(props.clone())
         return t()
 
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+    with ThreadPoolExecutor(max_workers=workers) as pool:
         futures = [pool.submit(_bound, t) for t in thunks]
-        # `with` joins every worker; surface the first failure (in
-        # submission order) after all have settled (result() re-raises
-        # per future)
-        return [f.result() for f in futures]
+        _, pending = wait(futures, return_when=FIRST_EXCEPTION)
+        for f in pending:
+            f.cancel()
+    # `with` joined every started worker
+    failed = [
+        (i, f.exception())
+        for i, f in enumerate(futures)
+        if not f.cancelled() and f.exception() is not None
+    ]
+    if failed:
+        for i, exc in failed[1:]:
+            logger.warning(
+                "overlapped job %d of %d also failed: %r", i + 1, len(thunks), exc
+            )
+        raise failed[0][1]
+    return [f.result() for f in futures]

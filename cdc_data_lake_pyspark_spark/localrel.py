@@ -26,10 +26,13 @@ to the list path (pinned in ``tests/test_localrel.py``).
 
 from __future__ import annotations
 
+import logging
 from typing import Iterable, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+logger = logging.getLogger(__name__)
 
 SchemaLike = Union[str, T.StructType]
 
@@ -91,5 +94,10 @@ def empty_frame(spark: SparkSession, schema: SchemaLike) -> DataFrame:
             jvm.java.util.ArrayList(), jschema
         )
         return _DF(jdf, spark)
-    except Exception:  # pragma: no cover - connect mode / API drift
+    except Exception as exc:  # pragma: no cover - connect mode / API drift
+        logger.warning(
+            "empty_frame: JVM LocalRelation path failed (%r); falling back "
+            "to the Python-worker createDataFrame path",
+            exc,
+        )
         return spark.createDataFrame([], struct)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cdc_data_lake_pyspark_spark.functions.text import shingles, tokens
+from cdc_data_lake_pyspark_spark.store import recover_halfswap, replace_store
 
 
 def exact_dedup(
@@ -1317,7 +1318,7 @@ def load_minhash_index(
     and stay candidates — the streaming gates' batch-scoped discipline
     at day granularity."""
     for sub in ("signatures", "buckets", "params"):
-        _recover_halfswap(f"{path}/{sub}")
+        recover_halfswap(f"{path}/{sub}")
     params_rows = spark.read.parquet(f"{path}/params").collect()
     if len(params_rows) != 1:
         raise ValueError(
@@ -1519,21 +1520,6 @@ def _estimate_filter(
     )
 
 
-def _recover_halfswap(d: str) -> None:
-    """Repair a crash-recoverable store swap that died between its two
-    renames: the old store is parked at ``<d>__old`` and ``<d>`` is
-    missing.  Shared by the batch index lifecycle and the streaming
-    near-dup gate (ADVICE r12: a reader that treats the gap as an EMPTY
-    store would silently forget the whole index — and the next
-    compaction, seeing ``<d>`` recreated by appends, would delete the
-    parked full store for good)."""
-    import os
-
-    old = f"{d}__old"
-    if os.path.isdir(old) and not os.path.isdir(d):
-        os.rename(old, d)
-
-
 def _refuse_live_gate_store(spark: SparkSession, d: str, api: str) -> None:
     """Guard a batch-artifact rewrite against a LIVE streaming-gate
     store (ADVICE r13, medium): the batch compactors read with a fixed
@@ -1568,12 +1554,8 @@ def _swap_compact_store(
     fold=None,
 ) -> None:
     """Rewrite one parquet append-store as ``target_files`` files with
-    duplicate rows folded, via a crash-RECOVERABLE swap: the compacted
-    store is fully written at ``<d>__new`` first, the old one parked at
-    ``<d>__old`` until the new one is renamed into place, and a
-    half-finished swap from a previous crash is repaired before
-    anything else — a crash at ANY point leaves a readable store for
-    the next reader (:func:`_recover_halfswap`).
+    duplicate rows folded, behind the crash-recoverable swap of
+    :func:`~cdc_data_lake_pyspark_spark.store.replace_store`.
 
     ``fold`` is the rewrite's reduction (DataFrame → DataFrame); the
     default folds EXACT duplicate rows (``distinct`` — correct for
@@ -1584,14 +1566,10 @@ def _swap_compact_store(
     row per key, which is read-equivalent under the store's own
     downstream aggregate, never under distinct."""
     import os
-    import shutil
 
-    _recover_halfswap(d)
+    recover_halfswap(d)
     if not os.path.isdir(d):
         return  # store not created yet — nothing to compact
-    old, new = f"{d}__old", f"{d}__new"
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(new, ignore_errors=True)
     df = spark.read.schema(schema).parquet(d)
     df = (fold(df) if fold is not None else df.distinct()).coalesce(
         target_files
@@ -1599,10 +1577,7 @@ def _swap_compact_store(
     writer = df.write.mode("overwrite")
     if partition_col is not None:
         writer = writer.partitionBy(partition_col)
-    writer.parquet(new)
-    os.rename(d, old)
-    os.rename(new, d)
-    shutil.rmtree(old, ignore_errors=True)
+    replace_store(d, writer.parquet)
 
 
 def append_to_minhash_index(

@@ -22,13 +22,14 @@ from __future__ import annotations
 import math
 import os
 import random
-import shutil
 from typing import Optional, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from cdc_data_lake_pyspark_spark.store import replace_store
 
 
 def _as_double(vec: Column) -> Column:
@@ -880,11 +881,11 @@ def save_ivf_pq_prefit(spark, prefit: tuple, path: str) -> None:
             ),
         ),
     ):
-        d = f"{path}/{sub}"
-        if os.path.isdir(d):  # overwrite semantics
-            shutil.rmtree(d)
-        os.makedirs(d, exist_ok=True)
-        papq.write_table(table, f"{d}/part-00000.parquet")
+        def _write(d):
+            os.makedirs(d)
+            papq.write_table(table, f"{d}/part-00000.parquet")
+
+        replace_store(f"{path}/{sub}", _write)
 
 
 def load_ivf_pq_prefit(spark, path: str) -> tuple[np.ndarray, np.ndarray]:
@@ -1481,12 +1482,10 @@ def load_ivf_corpus_index(spark, path: str, exclude_writer=None):
     the day-granularity replay-leak exclusion, null-safe so untagged
     bootstrap/append rows stay probe-visible (the
     ``load_minhash_index`` twin)."""
-    from cdc_data_lake_pyspark_spark.operators.dedup_text import (
-        _recover_halfswap,
-    )
+    from cdc_data_lake_pyspark_spark.store import recover_halfswap
 
     for sub in ("encoded", "centers", "codebooks"):
-        _recover_halfswap(f"{path}/{sub}")
+        recover_halfswap(f"{path}/{sub}")
     prefit = load_ivf_pq_prefit(spark, path)
     encoded = spark.read.option("mergeSchema", "true").parquet(
         f"{path}/encoded"

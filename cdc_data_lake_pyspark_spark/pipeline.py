@@ -25,6 +25,7 @@ upserts, then deletes (``transaction_log_util.py:78-168``).
 
 from __future__ import annotations
 
+import functools
 import logging
 from dataclasses import dataclass
 from typing import Optional
@@ -33,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from cdc_data_lake_pyspark_spark.concurrency import overlap_jobs
 from cdc_data_lake_pyspark_spark.config import TablesConfig, load_tables_config
 from cdc_data_lake_pyspark_spark.dedup import latest_change_per_key
 from cdc_data_lake_pyspark_spark.envelope import parse_debezium, parse_dms
@@ -125,61 +127,15 @@ class CdcPipeline:
             inventory = sorted(
                 table_op_inventory(routed), key=lambda e: (e.db, e.table)
             )
-            workers = min(self.max_parallel_tables, len(inventory))
-            if workers <= 1:
-                for entry in inventory:
-                    self._apply_table(entry, routed)
-            else:
-                from concurrent.futures import (
-                    FIRST_EXCEPTION,
-                    ThreadPoolExecutor,
-                    wait,
-                )
-
-                spark = routed.sparkSession
-                jspark = spark._jsparkSession
-
-                def _bound(entry):
-                    # Spark's active session is thread-local; bind the
-                    # shared session so sink code using
-                    # SparkSession.getActiveSession() works off-main-thread
-                    spark._jvm.SparkSession.setActiveSession(jspark)
-                    self._apply_table(entry, routed)
-
-                # Fail-fast like the serial path, but SAFELY: on the first
-                # worker failure, cancel tables that haven't started (they
-                # must not commit after the batch is reported failed —
-                # checkpoint replay is the recovery path), let in-flight
-                # tables finish (the `with` join guarantees none are still
-                # running when the finally unpersists the batch cache),
-                # and surface any secondary failures before re-raising the
-                # first one.
-                with ThreadPoolExecutor(max_workers=workers) as pool:
-                    futures = {
-                        pool.submit(_bound, e): e for e in inventory
-                    }
-                    done, pending = wait(futures, return_when=FIRST_EXCEPTION)
-                    first_exc = next(
-                        (f.exception() for f in done if f.exception()), None
-                    )
-                    if first_exc is not None:
-                        for f in pending:
-                            f.cancel()
-                        done, _ = wait(futures)  # join in-flight workers
-                        for f in done:
-                            if f.cancelled():
-                                continue
-                            exc = f.exception()
-                            if exc is not None and exc is not first_exc:
-                                e = futures[f]
-                                logging.getLogger(__name__).warning(
-                                    "batch %s: table %s.%s also failed: %r",
-                                    batch_id,
-                                    e.db,
-                                    e.table,
-                                    exc,
-                                )
-                        raise first_exc
+            # a failed table fails the batch: tables not yet started are
+            # cancelled (checkpoint replay is the recovery path), and the
+            # join guarantees none is still running when the finally
+            # unpersists the batch cache
+            overlap_jobs(
+                routed.sparkSession,
+                [functools.partial(self._apply_table, e, routed) for e in inventory],
+                max_workers=self.max_parallel_tables,
+            )
         finally:
             routed.unpersist()
 

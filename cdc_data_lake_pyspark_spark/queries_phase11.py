@@ -808,9 +808,7 @@ def daily_refresh_loop(
     if exactly_once:
         import os as _os
 
-        from cdc_data_lake_pyspark_spark.operators.dedup_text import (
-            _recover_halfswap,
-        )
+        from cdc_data_lake_pyspark_spark.store import recover_halfswap
 
         # input fingerprint (ADVICE r15): an order-independent content
         # digest + row count of the input frame, recorded with every
@@ -825,7 +823,7 @@ def daily_refresh_loop(
             F.count(F.lit(1)).alias("_rows"),
         ).collect()[0]
         input_fp = (fp_row["_fp"], fp_row["_rows"])
-        _recover_halfswap(days_dir)
+        recover_halfswap(days_dir)
         if _os.path.isdir(days_dir):
             # bounded collect: one row per completed day.  Pre-r16
             # manifests carry only _day; their _fp/_rows read as NULL
@@ -931,11 +929,9 @@ def daily_refresh_loop(
         else:
             # the persisted seen-URL digest store: 16-byte md5 anti-join
             # (repair a half-finished compaction swap before reading)
-            from cdc_data_lake_pyspark_spark.operators.dedup_text import (
-                _recover_halfswap,
-            )
+            from cdc_data_lake_pyspark_spark.store import recover_halfswap
 
-            _recover_halfswap(seen_dir)
+            recover_halfswap(seen_dir)
             if exactly_once:
                 # exclude the day's own leaked digests (a dead attempt's
                 # append would otherwise anti-join away the entire day)

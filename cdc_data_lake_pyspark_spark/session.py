@@ -10,10 +10,13 @@ levers).
 
 from __future__ import annotations
 
+import logging
 import os
 from typing import Mapping, Optional
 
 from pyspark.sql import SparkSession
+
+logger = logging.getLogger(__name__)
 
 
 def _default_driver_mem() -> str:
@@ -62,8 +65,12 @@ def build_session(
         from cdc_data_lake_pyspark_spark.catalog import ensure_compiled
 
         locallake_cp = ensure_compiled()
-    except Exception:  # pragma: no cover - compile failure is non-fatal
-        pass
+    except Exception as exc:  # pragma: no cover - compile failure is non-fatal
+        logger.warning(
+            "LocalLake catalog unavailable (compile failed: %r); the "
+            "session starts without it",
+            exc,
+        )
     # Spark's driver-memory default is 1g; in local[N] the driver JVM IS
     # the executor, so N concurrent hash-agg/shuffle tasks at sf>=0.1 can
     # OOM it (the round-3 bench crash class). Size the heap explicitly —

@@ -34,15 +34,14 @@ state once the batch replays.
 from __future__ import annotations
 
 import os
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from cdc_data_lake_pyspark_spark.functions.sketch import cms_sketch
 from cdc_data_lake_pyspark_spark.operators.relational import portable_id_hash
+from cdc_data_lake_pyspark_spark.store import read_store
 
 CELLS_SCHEMA = T.StructType(
     [
@@ -94,13 +93,6 @@ class StreamingHeavyHitters:
         self.ledger_dir = os.path.join(state_dir, "ledger")
 
     # ---------------------------------------------------------- reads
-    def _read(self, spark, path, schema) -> DataFrame:
-        if os.path.isdir(path):
-            return spark.read.schema(schema).parquet(path)
-        from cdc_data_lake_pyspark_spark.localrel import empty_frame
-
-        return empty_frame(spark, schema)
-
     def cells(self, spark: SparkSession) -> DataFrame:
         """Merged CMS grid: element-wise sum over every appended batch
         sketch — identical to one cms_sketch over the whole history.
@@ -125,7 +117,7 @@ class StreamingHeavyHitters:
         historical sums.  (Only the crash-replay dedup is weaker for
         those legacy rows — exactly the guarantee the old format never
         had anyway.)"""
-        raw = self._read(spark, self.cells_dir, CELLS_SCHEMA).withColumn(
+        raw = read_store(spark, self.cells_dir, CELLS_SCHEMA).withColumn(
             "batch_id",
             F.coalesce(
                 F.col("batch_id"),
@@ -143,7 +135,7 @@ class StreamingHeavyHitters:
         )
 
     def hot_keys(self, spark: SparkSession) -> DataFrame:
-        return self._read(spark, self.hot_dir, HOT_SCHEMA)
+        return read_store(spark, self.hot_dir, HOT_SCHEMA)
 
     # ---------------------------------------------------------- write
     def process_batch(self, batch_df: DataFrame, batch_id: int = -1) -> None:
@@ -151,7 +143,7 @@ class StreamingHeavyHitters:
         ledger_schema = T.StructType(
             [T.StructField("batch_id", T.LongType(), False)]
         )
-        done = self._read(spark, self.ledger_dir, ledger_schema)
+        done = read_store(spark, self.ledger_dir, ledger_schema)
         if done.filter(F.col("batch_id") == batch_id).limit(1).count() > 0:
             return  # checkpoint replay: state already reflects this batch
 
@@ -204,30 +196,3 @@ class StreamingHeavyHitters:
         tiny_frame(
             spark, [(int(batch_id),)], ledger_schema
         ).write.mode("append").parquet(self.ledger_dir)
-
-
-def start_heavy_hitter_stream(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    key_col: str = "key",
-    threshold: int = 100,
-    depth: int = 4,
-    width: int = 256,
-    trigger_seconds: Optional[int] = None,
-) -> StreamingQuery:
-    """Wire a streaming frame into the heavy-hitters gate via
-    foreachBatch (the same shell as the novelty/semantic gates)."""
-    gate = StreamingHeavyHitters(
-        state_dir,
-        key_col=key_col,
-        threshold=threshold,
-        depth=depth,
-        width=width,
-    )
-    writer = stream_df.writeStream.foreachBatch(gate.process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

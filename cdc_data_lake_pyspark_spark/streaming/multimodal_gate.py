@@ -61,7 +61,6 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from cdc_data_lake_pyspark_spark.streaming.neardup import (
     StreamingNearDupGate,
@@ -358,25 +357,3 @@ class StreamingMultimodalGate:
             ).select(self.id_col, self.vec_col),
             batch_id,
         )
-
-
-def start_multimodal_stream(
-    source: DataFrame,
-    gate: StreamingMultimodalGate,
-    checkpoint_location: str,
-    trigger_seconds: Optional[int] = None,
-    query_name: str = "multimodal_gate",
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Start the micro-batch stream feeding the chained gate."""
-    writer = (
-        source.writeStream.outputMode("append")
-        .queryName(query_name)
-        .foreachBatch(gate.process_batch)
-        .option("checkpointLocation", checkpoint_location)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -61,7 +61,6 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from cdc_data_lake_pyspark_spark.operators.dedup_text import (
     MinHashIndex,
@@ -69,9 +68,13 @@ from cdc_data_lake_pyspark_spark.operators.dedup_text import (
     _estimate_candidates,
     _estimate_filter,
     _pruned_index_buckets,
-    _recover_halfswap,
     _swap_compact_store,
     minhash_signatures,
+)
+from cdc_data_lake_pyspark_spark.store import (
+    read_store,
+    recover_halfswap,
+    replace_store,
 )
 
 #: signatures/buckets carry the batch_id that WROTE each row so a
@@ -187,21 +190,10 @@ class StreamingNearDupGate:
 
     # -- state readers ----------------------------------------------------
     def _read(self, spark: SparkSession, sub: str, schema) -> DataFrame:
-        """One append-store as a typed frame.  A half-finished compact()
-        swap is repaired FIRST, and only a genuinely-absent directory
-        reads as empty — any other failure raises (ADVICE r12: the old
-        blanket ``except`` returned an empty frame for a store stranded
-        mid-swap, so a restarted stream silently ran against an EMPTY
-        index and the next compaction deleted the parked full store)."""
-        import os
-
-        d = f"{self.index_dir}/{sub}"
-        _recover_halfswap(d)
-        if not os.path.isdir(d):
-            from cdc_data_lake_pyspark_spark.localrel import empty_frame
-
-            return empty_frame(spark, schema)
-        return spark.read.schema(schema).parquet(d)
+        """One append-store as a typed frame (:func:`read_store`: a
+        half-finished compact() swap is repaired first, and only an
+        absent directory reads as empty)."""
+        return read_store(spark, f"{self.index_dir}/{sub}", schema)
 
     def _params(self) -> tuple:
         return (
@@ -227,7 +219,7 @@ class StreamingNearDupGate:
         if self._params_validated:
             return
         d = f"{self.index_dir}/params"
-        _recover_halfswap(d)
+        recover_halfswap(d)
         if not os.path.isdir(d):
             if self._has_data_stores():
                 raise ValueError(
@@ -269,22 +261,19 @@ class StreamingNearDupGate:
         )
 
     def _write_params(self, spark: SparkSession) -> None:
-        """Persist the gate layout ATOMICALLY: the row set is fully
-        written at ``params__new`` and renamed into place — a crash
-        mid-write leaves ``params/`` absent (next batch rewrites), never
-        a half-committed directory that bricks every later read."""
-        import os
-        import shutil
-
-        d = f"{self.index_dir}/params"
-        new = f"{d}__new"
-        shutil.rmtree(new, ignore_errors=True)
+        """Persist the gate layout ATOMICALLY (:func:`replace_store`):
+        a crash mid-write leaves the previous ``params/`` or none (next
+        batch rewrites), never a half-committed directory that bricks
+        every later read."""
         from cdc_data_lake_pyspark_spark.localrel import tiny_frame
 
-        tiny_frame(
-            spark, [self._params()], PARAMS_SCHEMA
-        ).coalesce(1).write.mode("overwrite").parquet(new)
-        os.rename(new, d)
+        replace_store(
+            f"{self.index_dir}/params",
+            tiny_frame(spark, [self._params()], PARAMS_SCHEMA)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet,
+        )
 
     def adopt_store(self, spark: SparkSession) -> None:
         """One-time migration for a PRE-params store (data directories
@@ -584,25 +573,3 @@ class StreamingNearDupGate:
         ).coalesce(1).write.mode("append").parquet(
             f"{self.index_dir}/batches"
         )
-
-
-def start_neardup_stream(
-    source: DataFrame,
-    gate: StreamingNearDupGate,
-    checkpoint_location: str,
-    trigger_seconds: Optional[int] = None,
-    query_name: str = "neardup_gate",
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Start the micro-batch stream feeding the near-dup gate."""
-    writer = (
-        source.writeStream.outputMode("append")
-        .queryName(query_name)
-        .foreachBatch(gate.process_batch)
-        .option("checkpointLocation", checkpoint_location)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

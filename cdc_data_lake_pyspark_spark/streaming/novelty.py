@@ -39,7 +39,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+
+from cdc_data_lake_pyspark_spark.store import read_store
 
 INDEX_SCHEMA = T.StructType(
     [
@@ -94,12 +95,7 @@ class StreamingNoveltyGate:
 
     def index(self, spark: SparkSession) -> DataFrame:
         """Current index (empty-typed frame before the first batch)."""
-        try:
-            return spark.read.schema(INDEX_SCHEMA).parquet(self.index_dir)
-        except Exception:
-            from cdc_data_lake_pyspark_spark.localrel import empty_frame
-
-            return empty_frame(spark, INDEX_SCHEMA)
+        return read_store(spark, self.index_dir, INDEX_SCHEMA)
 
     def novel_docs(self, spark: SparkSession) -> DataFrame:
         """Gate output so far: one row per novel fingerprint with the
@@ -108,16 +104,7 @@ class StreamingNoveltyGate:
 
     def bloom_cells(self, spark: SparkSession) -> DataFrame:
         """Current Bloom state (distinct cells; appends may duplicate)."""
-        try:
-            return (
-                spark.read.schema(BLOOM_SCHEMA)
-                .parquet(self.bloom_dir)
-                .distinct()
-            )
-        except Exception:
-            from cdc_data_lake_pyspark_spark.localrel import empty_frame
-
-            return empty_frame(spark, BLOOM_SCHEMA)
+        return read_store(spark, self.bloom_dir, BLOOM_SCHEMA).distinct()
 
     def batch_reduce(self, batch_df: DataFrame, index: DataFrame) -> DataFrame:
         """The gate's pure single-batch reduction: fingerprint →
@@ -127,8 +114,13 @@ class StreamingNoveltyGate:
         ``process_batch`` wraps it with state plumbing (and the optional
         Bloom pre-filter, whose results are pinned equal to this plain
         path in the soak tests)."""
+        return self._firsts(batch_df).join(index.select("fp"), "fp", "left_anti")
+
+    def _firsts(self, batch_df: DataFrame) -> DataFrame:
+        """One ``(fp, doc_id)`` row per fingerprint in the batch, keeping
+        the minimum id — the batch self-dedup both paths start from."""
         fp = document_fingerprint(self.text_col, self.normalize)
-        firsts = (
+        return (
             batch_df.select(
                 fp.alias("fp"), F.col(self.id_col).cast("long").alias("doc_id")
             )
@@ -136,19 +128,9 @@ class StreamingNoveltyGate:
             .groupBy("fp")
             .agg(F.min("doc_id").alias("doc_id"))
         )
-        return firsts.join(index.select("fp"), "fp", "left_anti")
 
     def process_batch(self, batch_df: DataFrame, batch_id: int = -1) -> None:
         spark = batch_df.sparkSession
-        fp = document_fingerprint(self.text_col, self.normalize)
-        firsts = (
-            batch_df.select(
-                fp.alias("fp"), F.col(self.id_col).cast("long").alias("doc_id")
-            )
-            .filter(F.col("fp").isNotNull())
-            .groupBy("fp")
-            .agg(F.min("doc_id").alias("doc_id"))
-        )
         if self.bloom_dir is None:
             novel = self.batch_reduce(batch_df, self.index(spark))
         else:
@@ -166,7 +148,7 @@ class StreamingNoveltyGate:
 
             probed = bloom_probe(
                 self.bloom_cells(spark),
-                firsts,
+                self._firsts(batch_df),
                 "fp",
                 ["fp", "doc_id"],
                 depth=self.bloom_depth,
@@ -201,25 +183,3 @@ class StreamingNoveltyGate:
         # Append commits atomically (FileOutputCommitter); a replayed batch
         # re-derives `novel` as empty because its fps are now present.
         novel.write.mode("append").parquet(self.index_dir)
-
-
-def start_novelty_stream(
-    source: DataFrame,
-    gate: StreamingNoveltyGate,
-    checkpoint_location: str,
-    trigger_seconds: Optional[int] = None,
-    query_name: str = "novelty_gate",
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Start the micro-batch stream feeding the novelty gate."""
-    writer = (
-        source.writeStream.outputMode("append")
-        .queryName(query_name)
-        .foreachBatch(gate.process_batch)
-        .option("checkpointLocation", checkpoint_location)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -12,7 +12,7 @@ This module is that join, run per micro-batch::
 
     model = load_model(spark, model_path)         # once, at startup
     gate  = StreamingQualityGate(model, out_dir)
-    stream.writeStream.foreachBatch(gate.process_batch)...
+    start_foreach_batch_stream(stream, gate.process_batch, checkpoint)
 
 Per micro-batch: ``nb_score`` under the (static, 65-row, broadcast)
 model → MAP verdict → kept rows append to ``out_dir/kept`` and
@@ -37,13 +37,11 @@ replays to converge.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from cdc_data_lake_pyspark_spark.operators.classifier import nb_score
+from cdc_data_lake_pyspark_spark.store import read_store
 
 
 class StreamingQualityGate:
@@ -108,42 +106,18 @@ class StreamingQualityGate:
         ).parquet(f"{self.out_dir}/rejected")
 
     def _read(self, spark: SparkSession, sub: str) -> DataFrame:
-        try:
-            # distinct folds checkpoint-replay duplicates EXACTLY: rows
-            # are pure functions of (row, model, batch_id)
-            return spark.read.parquet(f"{self.out_dir}/{sub}").distinct()
-        except Exception:
-            from cdc_data_lake_pyspark_spark.localrel import empty_frame
-
-            return empty_frame(
-                spark, f"{self.id_col} long, {self.text_col} string, "
-                       "score_micro long, _batch_id long"
-            )
+        # distinct folds checkpoint-replay duplicates EXACTLY: rows are
+        # pure functions of (row, model, batch_id)
+        return read_store(
+            spark,
+            f"{self.out_dir}/{sub}",
+            f"{self.id_col} long, {self.text_col} string, "
+            "score_micro long, _batch_id long",
+            typed=False,
+        ).distinct()
 
     def kept_docs(self, spark: SparkSession) -> DataFrame:
         return self._read(spark, "kept")
 
     def rejected_docs(self, spark: SparkSession) -> DataFrame:
         return self._read(spark, "rejected")
-
-
-def start_quality_stream(
-    source: DataFrame,
-    gate: StreamingQualityGate,
-    checkpoint_location: str,
-    trigger_seconds: Optional[int] = None,
-    query_name: str = "quality_gate",
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Start the micro-batch stream feeding the learned quality gate."""
-    writer = (
-        source.writeStream.outputMode("append")
-        .queryName(query_name)
-        .foreachBatch(gate.process_batch)
-        .option("checkpointLocation", checkpoint_location)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -6,7 +6,7 @@ batches — to a quarantine store and apply the clean remainder.  This
 module wraps any ``foreachBatch`` target with row-level validation:
 
     gate = with_quarantine(pipeline_fn, checks=[...], quarantine_dir=...)
-    stream.writeStream.foreachBatch(gate)...
+    start_foreach_batch_stream(stream, gate, checkpoint)
 
 Per micro-batch: rows matching ANY violation condition are appended to
 the quarantine parquet (with the check name and batch id stamped for
@@ -30,6 +30,8 @@ from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from cdc_data_lake_pyspark_spark.store import read_store
 
 
 def with_quarantine(
@@ -71,10 +73,8 @@ def with_quarantine(
 
 
 def read_quarantine(spark, quarantine_dir: str) -> DataFrame:
-    """Quarantined rows so far (empty-safe)."""
-    try:
-        return spark.read.parquet(quarantine_dir)
-    except Exception:
-        from cdc_data_lake_pyspark_spark.localrel import empty_frame
-
-        return empty_frame(spark, "_violations string, _batch_id long")
+    """Quarantined rows so far (an absent store reads as empty; the
+    columns are the quarantined stream's own, so the read is untyped)."""
+    return read_store(
+        spark, quarantine_dir, "_violations string, _batch_id long", typed=False
+    )

@@ -28,6 +28,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from cdc_data_lake_pyspark_spark.apply import TableSink
 from cdc_data_lake_pyspark_spark.config import TableConfig
+from cdc_data_lake_pyspark_spark.streaming.runner import start_foreach_batch_stream
 
 
 def windowed_rollup(
@@ -97,14 +98,12 @@ def start_continuous_rollup(
         sink.merge(cfg, batch_df)
         sink.flush(cfg)
 
-    writer = (
-        agg.writeStream.outputMode("update")
-        .queryName(query_name)
-        .foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_location)
+    return start_foreach_batch_stream(
+        agg,
+        apply_batch,
+        checkpoint_location,
+        query_name=query_name,
+        available_now=available_now,
+        trigger_seconds=trigger_seconds,
+        output_mode="update",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -1,9 +1,16 @@
-"""Stream → ``foreachBatch`` → CdcPipeline wiring (SURVEY §2.1 S3, §2.5).
+"""Stream → ``foreachBatch`` wiring (SURVEY §2.1 S3, §2.5).
 
-Reference parity: ``writeStream.outputMode('append')
+:func:`start_foreach_batch_stream` is the one stream starter in the
+package: every micro-batch consumer — the CDC pipeline, each streaming
+gate, the continuous rollup — hands it a source, a ``(batch_df,
+batch_id)`` callable and a checkpoint, and gets back the running query.
+It is the reference's ``writeStream.outputMode('append')
 .trigger(processingTime='60 seconds').foreachBatch(process.processBatch)
 .option('checkpointLocation', ...)`` —
-``kafka-iceberg-streaming-emrserverless-v2.py:218-225``.
+``kafka-iceberg-streaming-emrserverless-v2.py:218-225`` — with the
+trigger and output mode as arguments.  :func:`start_cdc_stream` builds
+the CDC pipeline's callable (optionally behind the dead-letter
+quarantine) on top of it.
 
 Exactly-once story (same as reference): source offsets + checkpoint give
 at-least-once batch replay; MERGE-on-PK application converges on replay,
@@ -12,7 +19,7 @@ appends are the non-idempotent edge (documented, as in the reference).
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
@@ -81,12 +88,42 @@ def start_cdc_stream(
         process = with_quarantine(
             pipeline.process_batch, envelope_checks(), quarantine_dir
         )
+    return start_foreach_batch_stream(
+        source,
+        process,
+        checkpoint_location,
+        query_name=query_name,
+        available_now=available_now,
+        trigger_seconds=trigger_seconds,
+    )
+
+
+def start_foreach_batch_stream(
+    source: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint_location: str,
+    *,
+    query_name: Optional[str] = None,
+    available_now: bool = False,
+    trigger_seconds: Optional[int] = None,
+    output_mode: str = "append",
+) -> StreamingQuery:
+    """Start a micro-batch stream calling ``fn(batch_df, batch_id)`` for
+    every batch of ``source``, checkpointed at ``checkpoint_location``.
+
+    ``available_now=True`` drains everything currently available then
+    stops — the testing/backfill trigger; otherwise ``trigger_seconds``
+    sets a processing-time trigger, and ``None`` runs batches back to
+    back (Spark's default).  ``output_mode`` is ``"update"`` for a
+    stateful aggregate that emits changed rows (the continuous rollup).
+    """
     writer = (
-        source.writeStream.outputMode("append")
-        .queryName(query_name)
-        .foreachBatch(process)
+        source.writeStream.outputMode(output_mode)
+        .foreachBatch(fn)
         .option("checkpointLocation", checkpoint_location)
     )
+    if query_name:
+        writer = writer.queryName(query_name)
     if available_now:
         writer = writer.trigger(availableNow=True)
     elif trigger_seconds:

@@ -37,20 +37,18 @@ drop a novel vector).
 
 from __future__ import annotations
 
-from typing import Optional
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from cdc_data_lake_pyspark_spark.operators.similarity import (
     cosine_near_dup_pairs_lsh,
     cosine_pandas_udf,
     make_hyperplanes,
 )
+from cdc_data_lake_pyspark_spark.store import read_store
 
 INDEX_SCHEMA = T.StructType(
     [
@@ -96,12 +94,7 @@ class StreamingSemanticGate:
 
     # -- state ----------------------------------------------------------
     def index(self, spark: SparkSession) -> DataFrame:
-        try:
-            return spark.read.schema(INDEX_SCHEMA).parquet(self.index_dir)
-        except Exception:
-            from cdc_data_lake_pyspark_spark.localrel import empty_frame
-
-            return empty_frame(spark, INDEX_SCHEMA)
+        return read_store(spark, self.index_dir, INDEX_SCHEMA)
 
     def novel_ids(self, spark: SparkSession) -> DataFrame:
         """Gate output so far: the ingested (kept) vector ids."""
@@ -214,25 +207,3 @@ class StreamingSemanticGate:
             F.lit(batch_id).cast("long").alias("batch_id"),
         )
         out.write.mode("append").parquet(self.index_dir)
-
-
-def start_semantic_stream(
-    source: DataFrame,
-    gate: StreamingSemanticGate,
-    checkpoint_location: str,
-    trigger_seconds: Optional[int] = None,
-    query_name: str = "semantic_gate",
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Start the micro-batch stream feeding the semantic gate."""
-    writer = (
-        source.writeStream.outputMode("append")
-        .queryName(query_name)
-        .foreachBatch(gate.process_batch)
-        .option("checkpointLocation", checkpoint_location)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -51,18 +51,15 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
-from cdc_data_lake_pyspark_spark.operators.dedup_text import (
-    _recover_halfswap,
-    _swap_compact_store,
-)
+from cdc_data_lake_pyspark_spark.operators.dedup_text import _swap_compact_store
 from cdc_data_lake_pyspark_spark.operators.similarity import (
     _ivf_encode_frame,
     _ivf_probe_frame,
     _score_probed_cells,
     load_ivf_pq_prefit,
 )
+from cdc_data_lake_pyspark_spark.store import read_store
 from cdc_data_lake_pyspark_spark.streaming.neardup import (
     _require_integral_id,
 )
@@ -132,18 +129,8 @@ class StreamingVectorDedupGate:
 
     # -- state readers ----------------------------------------------------
     def _read(self, spark: SparkSession, sub: str, schema) -> DataFrame:
-        """One append-store as a typed frame — the near-dup gate's
-        reader discipline: repair a half-finished compaction swap
-        first; only a genuinely-absent directory reads as empty."""
-        import os
-
-        d = f"{self.index_dir}/{sub}"
-        _recover_halfswap(d)
-        if not os.path.isdir(d):
-            from cdc_data_lake_pyspark_spark.localrel import empty_frame
-
-            return empty_frame(spark, schema)
-        return spark.read.schema(schema).parquet(d)
+        """One append-store as a typed frame (:func:`read_store`)."""
+        return read_store(spark, f"{self.index_dir}/{sub}", schema)
 
     def kept_vectors(self, spark: SparkSession) -> DataFrame:
         """Gate output so far: ``(vec_id, batch_id)`` of every vector
@@ -279,25 +266,3 @@ class StreamingVectorDedupGate:
         ).coalesce(1).write.mode("append").parquet(
             f"{self.index_dir}/batches"
         )
-
-
-def start_vector_dedup_stream(
-    source: DataFrame,
-    gate: StreamingVectorDedupGate,
-    checkpoint_location: str,
-    trigger_seconds: Optional[int] = None,
-    query_name: str = "vector_dedup_gate",
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Start the micro-batch stream feeding the vector dedup gate."""
-    writer = (
-        source.writeStream.outputMode("append")
-        .queryName(query_name)
-        .foreachBatch(gate.process_batch)
-        .option("checkpointLocation", checkpoint_location)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

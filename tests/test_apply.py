@@ -1,3 +1,4 @@
+import pytest
 from pyspark.sql import Row
 
 from cdc_data_lake_pyspark_spark.apply import (
@@ -151,6 +152,60 @@ def test_parquet_sink_compaction(spark, tmp_path):
     assert removed > 0
     after = sorted(r.k for r in sink.read(spark, "d", "t").collect())
     assert after == before == [0, 1, 2, 3]
+
+
+@pytest.mark.parametrize("seam", ["new_copy_written", "old_copy_parked"])
+def test_parquet_sink_swap_crash_converges(spark, tmp_path, monkeypatch, seam):
+    """A merge that dies inside the copy-on-write swap — after the new copy
+    is written, or after the old copy is parked but before the new one is
+    renamed into place — leaves the full base table visible to ``exists``,
+    ``read`` and the next merge, and the replayed merge converges to the
+    uninterrupted result."""
+    import os
+
+    from cdc_data_lake_pyspark_spark.apply import ParquetTableSink
+
+    cfg = TableConfig(db="d", table="t", primary_key="k")
+    base = spark.createDataFrame([(i, f"v{i}") for i in range(6)], "k long, v string")
+    batch = spark.createDataFrame([(2, "new"), (9, "add")], "k long, v string")
+
+    def run(root):
+        sink = ParquetTableSink(str(root))
+        sink.create_if_not_exists(cfg, base.schema)
+        sink.append(cfg, base)
+        return sink
+
+    ref = run(tmp_path / "ref")
+    ref.merge(cfg, batch)
+    expected = sorted(ref.read(spark, "d", "t").collect())
+
+    sink = run(tmp_path / "lake")
+    path = os.path.join(str(tmp_path / "lake"), "d", "t")
+    real_rename, real_replace = os.rename, os.replace
+    fired = []
+
+    def crashing(real):
+        def move(src, dst, *args, **kwargs):
+            src, dst = str(src), str(dst)
+            parks_old = src == path and dst != path
+            installs_new = dst == path and src != f"{path}__old"
+            if not fired and (parks_old if seam == "new_copy_written" else installs_new):
+                fired.append((src, dst))
+                raise OSError(f"injected crash at {seam}")
+            return real(src, dst, *args, **kwargs)
+
+        return move
+
+    monkeypatch.setattr(os, "rename", crashing(real_rename))
+    monkeypatch.setattr(os, "replace", crashing(real_replace))
+    with pytest.raises(OSError, match="injected crash"):
+        sink.merge(cfg, batch)
+    monkeypatch.undo()
+
+    assert sink.exists("d", "t")
+    assert sorted(sink.read(spark, "d", "t").collect()) == sorted(base.collect())
+    sink.merge(cfg, batch)  # the replayed batch
+    assert sorted(sink.read(spark, "d", "t").collect()) == expected
 
 
 def test_upsert_type_conflict_casts_to_target(spark):

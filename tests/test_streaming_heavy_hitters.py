@@ -13,10 +13,8 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from cdc_data_lake_pyspark_spark.functions.sketch import cms_sketch
-from cdc_data_lake_pyspark_spark.streaming.heavy_hitters import (
-    StreamingHeavyHitters,
-    start_heavy_hitter_stream,
-)
+from cdc_data_lake_pyspark_spark.streaming.heavy_hitters import StreamingHeavyHitters
+from cdc_data_lake_pyspark_spark.streaming.runner import start_foreach_batch_stream
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -78,20 +76,16 @@ def test_stream_wiring_end_to_end(spark, tmp_path):
         [Row(key=f"k{i % 5}") for i in range(200)]
     ).coalesce(1).write.mode("append").json(src)
     stream = spark.readStream.schema("key string").json(src)
-    q = start_heavy_hitter_stream(
-        stream,
-        state_dir=str(tmp_path / "state"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        threshold=30,
-        width=128,
+    gate = StreamingHeavyHitters(
+        str(tmp_path / "state"), threshold=30, width=128
+    )
+    q = start_foreach_batch_stream(
+        stream, gate.process_batch, str(tmp_path / "ckpt")
     )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    gate = StreamingHeavyHitters(
-        str(tmp_path / "state"), threshold=30, width=128
-    )
     flagged = {r.key for r in gate.hot_keys(spark).collect()}
     assert flagged == {f"k{i}" for i in range(5)}  # each key count 40 >= 30
 

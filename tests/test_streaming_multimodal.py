@@ -328,8 +328,8 @@ def test_real_stream_crash_between_commits_converges(
     same-batch_id re-delivery assumption into a demonstrated fact."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from cdc_data_lake_pyspark_spark.streaming.multimodal_gate import (
-        start_multimodal_stream,
+    from cdc_data_lake_pyspark_spark.streaming.runner import (
+        start_foreach_batch_stream,
     )
     from cdc_data_lake_pyspark_spark.streaming.vector_gate import (
         MANIFEST_SCHEMA,
@@ -357,7 +357,9 @@ def test_real_stream_crash_between_commits_converges(
         stream = spark.readStream.schema(
             "doc_id long, text string, embedding array<double>"
         ).json(src)
-        q = start_multimodal_stream(stream, gate, ckpt, available_now=True)
+        q = start_foreach_batch_stream(
+            stream, gate.process_batch, ckpt, available_now=True
+        )
         q.awaitTermination(600)
 
     for window, install, clear in (
@@ -430,12 +432,12 @@ def test_real_stream_crash_between_commits_converges(
 @needs_data
 def test_multimodal_writestream_e2e_and_restart(spark, seeded, tmp_path):
     """The packaged gate behind a REAL Structured Streaming query
-    (readStream JSON → start_multimodal_stream, availableNow): sliced
+    (readStream JSON → start_foreach_batch_stream, availableNow): sliced
     arrival equals the pure batch reduction, and a checkpoint restart
     with no new data changes neither store — the gates' own e2e shape,
     applied to the chain."""
-    from cdc_data_lake_pyspark_spark.streaming.multimodal_gate import (
-        start_multimodal_stream,
+    from cdc_data_lake_pyspark_spark.streaming.runner import (
+        start_foreach_batch_stream,
     )
 
     text_seed, vec_seed, d1, _emb = seeded
@@ -453,7 +455,9 @@ def test_multimodal_writestream_e2e_and_restart(spark, seeded, tmp_path):
         stream = spark.readStream.schema(
             "doc_id long, text string, embedding array<double>"
         ).json(src)
-        q = start_multimodal_stream(stream, gate, ckpt, available_now=True)
+        q = start_foreach_batch_stream(
+            stream, gate.process_batch, ckpt, available_now=True
+        )
         q.awaitTermination(600)
 
     sliced = d1.withColumn(

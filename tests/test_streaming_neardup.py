@@ -18,10 +18,8 @@ from cdc_data_lake_pyspark_spark.operators.dedup_text import (
     minhash_index,
     minhash_probe,
 )
-from cdc_data_lake_pyspark_spark.streaming.neardup import (
-    StreamingNearDupGate,
-    start_neardup_stream,
-)
+from cdc_data_lake_pyspark_spark.streaming.neardup import StreamingNearDupGate
+from cdc_data_lake_pyspark_spark.streaming.runner import start_foreach_batch_stream
 
 SF_DIR = "/root/testdata/sf0.01"
 THRESHOLD = 0.6
@@ -64,7 +62,9 @@ def _expected_novel(docs) -> set:
 
 def _drain(spark, src_dir, gate, ckpt):
     stream = spark.readStream.schema("doc_id long, text string").json(src_dir)
-    q = start_neardup_stream(stream, gate, ckpt, available_now=True)
+    q = start_foreach_batch_stream(
+        stream, gate.process_batch, ckpt, available_now=True
+    )
     q.awaitTermination(600)
 
 

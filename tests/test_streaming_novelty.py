@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 from cdc_data_lake_pyspark_spark.streaming.novelty import (
     StreamingNoveltyGate,
     document_fingerprint,
-    start_novelty_stream,
 )
+from cdc_data_lake_pyspark_spark.streaming.runner import start_foreach_batch_stream
 
 SF_DIR = "/root/testdata/sf0.01"
 N_SLICES = 4
@@ -31,7 +31,9 @@ def _drain(spark, src_dir, gate, ckpt):
     stream = (
         spark.readStream.schema("doc_id long, text string").json(src_dir)
     )
-    q = start_novelty_stream(stream, gate, ckpt, available_now=True)
+    q = start_foreach_batch_stream(
+        stream, gate.process_batch, ckpt, available_now=True
+    )
     q.awaitTermination(600)
 
 

@@ -17,10 +17,8 @@ from cdc_data_lake_pyspark_spark.operators.classifier import (
     nb_train,
     save_model,
 )
-from cdc_data_lake_pyspark_spark.streaming.quality_gate import (
-    StreamingQualityGate,
-    start_quality_stream,
-)
+from cdc_data_lake_pyspark_spark.streaming.quality_gate import StreamingQualityGate
+from cdc_data_lake_pyspark_spark.streaming.runner import start_foreach_batch_stream
 
 SF_DIR = "/root/testdata/sf0.01"
 BOILER = (
@@ -70,9 +68,9 @@ def test_streamed_gate_equals_batch_scorer(spark, tmp_path):
         sliced.filter(F.col("_slice") == s).select(
             "doc_id", "text"
         ).coalesce(1).write.mode("append").json(src)
-        q = start_quality_stream(
+        q = start_foreach_batch_stream(
             spark.readStream.schema("doc_id long, text string").json(src),
-            gate,
+            gate.process_batch,
             ckpt,
             available_now=True,
         )
@@ -98,9 +96,9 @@ def test_streamed_gate_equals_batch_scorer(spark, tmp_path):
     assert all(d % 3 == 0 for d, _, _ in rejected)
 
     # restart with the same checkpoint and no new data: output unchanged
-    q = start_quality_stream(
+    q = start_foreach_batch_stream(
         spark.readStream.schema("doc_id long, text string").json(src),
-        gate,
+        gate.process_batch,
         ckpt,
         available_now=True,
     )

@@ -15,10 +15,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cdc_data_lake_pyspark_spark.operators.similarity import make_hyperplanes
-from cdc_data_lake_pyspark_spark.streaming.semantic import (
-    StreamingSemanticGate,
-    start_semantic_stream,
-)
+from cdc_data_lake_pyspark_spark.streaming.runner import start_foreach_batch_stream
+from cdc_data_lake_pyspark_spark.streaming.semantic import StreamingSemanticGate
 
 SF_DIR = "/root/testdata/sf0.01"
 N_SLICES = 3
@@ -114,7 +112,9 @@ def test_semantic_gate_matches_reference_and_is_idempotent(spark, tmp_path):
         stream = spark.readStream.schema(
             "vec_id long, embedding array<float>"
         ).parquet(src)
-        q = start_semantic_stream(stream, gate, ckpt, available_now=True)
+        q = start_foreach_batch_stream(
+            stream, gate.process_batch, ckpt, available_now=True
+        )
         q.awaitTermination(600)
 
     got = sorted(r["vec_id"] for r in gate.novel_ids(spark).collect())

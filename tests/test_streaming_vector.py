@@ -22,10 +22,8 @@ from cdc_data_lake_pyspark_spark.operators.similarity import (
     save_ivf_corpus_index,
     save_ivf_pq_prefit,
 )
-from cdc_data_lake_pyspark_spark.streaming.vector_gate import (
-    StreamingVectorDedupGate,
-    start_vector_dedup_stream,
-)
+from cdc_data_lake_pyspark_spark.streaming.runner import start_foreach_batch_stream
+from cdc_data_lake_pyspark_spark.streaming.vector_gate import StreamingVectorDedupGate
 
 SF_DIR = "/root/testdata/sf0.01"
 THRESHOLD = 0.9
@@ -86,7 +84,9 @@ def test_sliced_vector_stream_equals_batch_rule(
         stream = spark.readStream.schema(
             "vec_id long, embedding array<double>"
         ).json(src)
-        q = start_vector_dedup_stream(stream, gate, ckpt, available_now=True)
+        q = start_foreach_batch_stream(
+            stream, gate.process_batch, ckpt, available_now=True
+        )
         q.awaitTermination(600)
     expected = _expected_novel(corpus, prefit)
     got = {r.vec_id for r in gate.kept_vectors(spark).collect()}
@@ -97,7 +97,9 @@ def test_sliced_vector_stream_equals_batch_rule(
     stream = spark.readStream.schema(
         "vec_id long, embedding array<double>"
     ).json(src)
-    q = start_vector_dedup_stream(stream, gate, ckpt, available_now=True)
+    q = start_foreach_batch_stream(
+        stream, gate.process_batch, ckpt, available_now=True
+    )
     q.awaitTermination(600)
     assert {r.vec_id for r in gate.kept_vectors(spark).collect()} == expected
 
