@@ -28,6 +28,7 @@ def overlap_jobs(
     spark: SparkSession,
     thunks: Sequence[Callable[[], object]],
     max_workers: Optional[int] = None,
+    inherit_local_properties: bool = True,
 ) -> list:
     """Run independent job-submitting thunks concurrently, at most
     ``max_workers`` at a time (default: all at once); return their
@@ -39,6 +40,12 @@ def overlap_jobs(
     are joined (none is still running when this returns or raises), any
     other failure among them is logged as a WARNING, and the first
     failure in SUBMISSION order is re-raised.
+
+    ``inherit_local_properties=False`` starts the workers without the
+    caller's local properties, for a caller running inside a SQL
+    execution (a ``foreachBatch`` callback): its running execution id,
+    job group and propagated SQL confs then stay on the calling thread,
+    and each worker's actions run as their own root executions.
 
     Note the caller still owns rollback of any side effects a completed
     sibling thunk committed before the failure surfaced — wrap cleanup
@@ -59,10 +66,12 @@ def overlap_jobs(
     # pair pyspark.util.inheritable_thread_target uses — one clone per
     # thunk, since workers mutate their copy (job descriptions, SQL
     # execution ids) concurrently.
-    try:
-        props = spark.sparkContext._jsc.sc().getLocalProperties().clone()
-    except Exception:
-        props = None
+    props = None
+    if inherit_local_properties:
+        try:
+            props = spark.sparkContext._jsc.sc().getLocalProperties().clone()
+        except Exception:
+            props = None
 
     def _bound(t):
         # the active session is thread-local on the JVM side; bind the

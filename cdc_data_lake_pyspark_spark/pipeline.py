@@ -130,11 +130,15 @@ class CdcPipeline:
             # a failed table fails the batch: tables not yet started are
             # cancelled (checkpoint replay is the recovery path), and the
             # join guarantees none is still running when the finally
-            # unpersists the batch cache
+            # unpersists the batch cache.  The table workers do not
+            # inherit the foreachBatch thread's local properties (its
+            # running SQL execution, job group and SQL confs): each
+            # table's writes stay root executions of their own.
             overlap_jobs(
                 routed.sparkSession,
                 [functools.partial(self._apply_table, e, routed) for e in inventory],
                 max_workers=self.max_parallel_tables,
+                inherit_local_properties=False,
             )
         finally:
             routed.unpersist()

@@ -1,6 +1,7 @@
 """``concurrency.overlap_jobs``: the worker cap, results in submission
 order, and fail-fast that cancels thunks not yet started while joining
-the running ones and logging their failures."""
+the running ones and logging their failures, and the caller's local
+properties copied into the workers unless the caller opts out."""
 
 from __future__ import annotations
 
@@ -53,3 +54,18 @@ def test_overlap_jobs_first_failure_cancels_pending(spark, caplog):
     assert state["running"] == 0  # every started thunk was joined
     assert len(state["started"]) < 8  # later thunks never started
     assert any("also failed" in r.getMessage() for r in caplog.records)
+
+
+def test_overlap_jobs_local_properties_inherited_unless_disabled(spark):
+    sc = spark.sparkContext
+    sc.setLocalProperty("cdc.test.overlap", "caller")
+    try:
+        def read():
+            return sc.getLocalProperty("cdc.test.overlap")
+
+        assert overlap_jobs(spark, [read, read]) == ["caller", "caller"]
+        assert overlap_jobs(
+            spark, [read, read], inherit_local_properties=False
+        ) == [None, None]
+    finally:
+        sc.setLocalProperty("cdc.test.overlap", None)
