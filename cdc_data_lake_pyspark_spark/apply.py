@@ -22,14 +22,13 @@ Spark-first design: merge/delete are pure DataFrame transforms —
     merged  = updates ∪ (target ⟕anti updates on keys)
     deleted = target ⟕anti deletes on keys
 
-not a full-outer join with per-column coalesce: the anti-join build side is
-the (deduped, usually small) update set, which Spark auto-broadcasts under
-AQE; at 100 TB the target is never shuffled when the update side fits the
-broadcast threshold, and otherwise AQE picks a shuffled hash join keyed on
-the PK — exactly the plan a lakehouse MERGE produces.  The SQL-text
-generators for Iceberg/Delta sinks are kept (and unit-tested) for when a
-MERGE-capable catalog is on the classpath; locally the parquet sink applies
-the same semantics via the DataFrame path.
+not a full-outer join with per-column coalesce.  As measured, the merge
+SHUFFLES THE TARGET on the PK even when the update side is small: AQE
+does not turn the anti-join into a broadcast in time (cdcbench
+``fanout_many_tables``: about 5.5 MB shuffle write per batch; 0.57 MB
+with an explicit broadcast of the key side).  :class:`FrameTableSink`
+applies these transforms for the in-memory and parquet sinks;
+:class:`SqlTableSink` runs the generated Iceberg/Delta SQL text instead.
 """
 
 from __future__ import annotations
@@ -44,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cdc_data_lake_pyspark_spark.config import TableConfig
+from cdc_data_lake_pyspark_spark.localrel import empty_frame
 from cdc_data_lake_pyspark_spark.schema import align_to_schema, merge_schemas
 from cdc_data_lake_pyspark_spark.store import recover_halfswap, replace_store
 
@@ -170,13 +170,12 @@ def build_delete_sql(
     the broken self-comparison in ``WriteIcebergTable.py:197``).  With
     ``ts_guard``, only target rows at-or-before the delete's timestamp
     match (stale deletes are inert)."""
-    alias = target_table_alias(target_table)
-    cond = build_on_condition(keys, t=alias, u="u")
+    cond = build_on_condition(keys, t="t1", u="u")
     if ts_guard:
-        cond += f" AND u.{_quote(ts_guard)} >= {alias}.{_quote(ts_guard)}"
+        cond += f" AND u.{_quote(ts_guard)} >= t1.{_quote(ts_guard)}"
     key_list = ", ".join(f"u.{_quote(k)}" for k in keys)
     return (
-        f"DELETE FROM {target_table} {alias} WHERE EXISTS "
+        f"DELETE FROM {target_table} t1 WHERE EXISTS "
         f"(SELECT {key_list} FROM {source_view} u WHERE {cond})"
     )
 
@@ -207,10 +206,6 @@ def build_merge_statement_sequence(
         merge,
         f"ALTER TABLE {target_table} SET TBLPROPERTIES ({prop}='true')",
     ]
-
-
-def target_table_alias(target_table: str) -> str:
-    return "t1"
 
 
 def build_compaction_sql(catalog: str, db: str, table: str, using: str = "iceberg") -> str:
@@ -268,6 +263,10 @@ class TableSink:
     Implementations must make ``append``/``merge``/``delete`` idempotent at
     the batch level where possible (merge-on-PK re-application converges,
     which is the reference's exactly-once story — SURVEY §2.5).
+
+    A write creates a missing table: ``append`` and ``merge`` create it
+    from the incoming frame, so callers never call
+    :meth:`create_if_not_exists` first.
     """
 
     #: J3 policy — ``True`` mirrors the reference's log-and-continue.
@@ -309,13 +308,75 @@ class TableSink:
             logger.exception("sink %s failed (continue_on_error)", action)
 
 
-class MemoryTableSink(TableSink):
-    """In-memory sink: tables are DataFrames.
+class FrameTableSink(TableSink):
+    """The apply step written once as frame transforms: append with schema
+    evolution (S4), merge via :func:`merge_into` (J1), delete via
+    :func:`delete_matching` (J2).  Subclasses supply only storage —
+    :meth:`exists`, :meth:`read`, :meth:`_save` and :meth:`flush`.  Each op
+    reads the base table at most once; a missing table is saved straight
+    from the incoming frame, with no empty table written first.
+    """
 
-    Mutations build a LAZY plan chain; :meth:`flush` (called by the
-    pipeline once per table per batch) checkpoints the final state, so a
-    batch of append+merge+delete costs one materialization instead of
-    three.  Reading an unflushed table is still correct — just lazy.
+    def _save(self, cfg: TableConfig, df: DataFrame, add: bool = False) -> None:
+        """Replace the table with ``df`` or, with ``add``, add ``df``'s rows
+        (already aligned to the table's schema) to it."""
+        raise NotImplementedError
+
+    def create_if_not_exists(self, cfg, schema):
+        if not self.exists(cfg.db, cfg.table):
+            self._save(cfg, empty_frame(SparkSession.getActiveSession(), schema))
+
+    def append(self, cfg, df):
+        def _do():
+            if not self.exists(cfg.db, cfg.table):
+                return self._save(cfg, df)
+            base = self.read(df.sparkSession, cfg.db, cfg.table)
+            evolved = merge_schemas(base.schema, df.schema)
+            if len(evolved) == len(base.schema):
+                return self._save(cfg, align_to_schema(df, evolved), add=True)
+            # schema evolution: rewrite the base with the union schema
+            base = align_to_schema(base, evolved)
+            self._save(cfg, base.unionByName(align_to_schema(df, evolved)))
+
+        self._guard("append", _do)
+
+    def merge(self, cfg, df, ts_guard=None):
+        def _do():
+            if not self.exists(cfg.db, cfg.table):
+                return self._save(cfg, df)
+            base = self.read(df.sparkSession, cfg.db, cfg.table)
+            evolved = merge_schemas(base.schema, df.schema)
+            merged = merge_into(
+                align_to_schema(base, evolved),
+                align_to_schema(df, evolved),
+                cfg.primary_keys,
+                ts_guard=ts_guard,
+            )
+            self._save(cfg, merged)
+
+        self._guard("merge", _do)
+
+    def delete(self, cfg, keys_df, ts_guard=None):
+        def _do():
+            if not self.exists(cfg.db, cfg.table):
+                return
+            base = self.read(keys_df.sparkSession, cfg.db, cfg.table)
+            self._save(
+                cfg, delete_matching(base, keys_df, cfg.primary_keys, ts_guard=ts_guard)
+            )
+
+        self._guard("delete", _do)
+
+
+class MemoryTableSink(FrameTableSink):
+    """In-memory sink: tables are DataFrames in a dict.
+
+    The shared :class:`FrameTableSink` ops only chain LAZY plans here (a
+    first append or merge stores its frame as the table); :meth:`flush`
+    (called by the pipeline once per table per batch) checkpoints the
+    final state, so a batch of append+merge+delete costs one
+    materialization instead of three.  Reading an unflushed table is
+    still correct — just lazy.
     """
 
     def __init__(self, continue_on_error: bool = False):
@@ -328,54 +389,9 @@ class MemoryTableSink(TableSink):
     def read(self, spark, db, table):
         return self.tables[(db, table)]
 
-    def create_if_not_exists(self, cfg, schema):
+    def _save(self, cfg, df, add=False):
         key = (cfg.db, cfg.table)
-        if key not in self.tables:
-            from cdc_data_lake_pyspark_spark.localrel import empty_frame
-
-            spark = SparkSession.getActiveSession()
-            self.tables[key] = empty_frame(spark, schema)
-
-    def append(self, cfg, df):
-        def _do():
-            key = (cfg.db, cfg.table)
-            if key in self.tables:
-                base = self.tables[key]
-                evolved = merge_schemas(base.schema, df.schema)
-                base = align_to_schema(base, evolved)
-                incoming = align_to_schema(df, evolved)
-                self.tables[key] = base.unionByName(incoming)
-            else:
-                self.tables[key] = df
-
-        self._guard("append", _do)
-
-    def merge(self, cfg, df, ts_guard=None):
-        def _do():
-            key = (cfg.db, cfg.table)
-            if key not in self.tables:
-                self.tables[key] = df
-                return
-            base = self.tables[key]
-            evolved = merge_schemas(base.schema, df.schema)
-            base = align_to_schema(base, evolved)
-            incoming = align_to_schema(df, evolved)
-            self.tables[key] = merge_into(
-                base, incoming, cfg.primary_keys, ts_guard=ts_guard
-            )
-
-        self._guard("merge", _do)
-
-    def delete(self, cfg, keys_df, ts_guard=None):
-        def _do():
-            key = (cfg.db, cfg.table)
-            if key not in self.tables:
-                return
-            self.tables[key] = delete_matching(
-                self.tables[key], keys_df, cfg.primary_keys, ts_guard=ts_guard
-            )
-
-        self._guard("delete", _do)
+        self.tables[key] = self.tables[key].unionByName(df) if add else df
 
     def flush(self, cfg):
         key = (cfg.db, cfg.table)
@@ -394,12 +410,12 @@ class SqlTableSink(TableSink):
     EXISTS`` (``:326-327``).  Views are session-scoped temp views named
     ``tmp_<table>_{u|d}_<batch-part>`` like the reference's ephemeral
     relations (``:257-260``) and dropped after use (``:299-301``).
+    ``append`` and ``merge`` run the CREATE first.
 
-    Requires a MERGE-capable catalog on the classpath (Iceberg runtime or
-    delta-spark) — not available in this container, so this sink is
-    exercised only through its SQL text in unit tests; the DataFrame
-    semantics it must produce are what MemoryTableSink/ParquetTableSink
-    implement and the oracle gate verifies.
+    Requires a MERGE-capable catalog on the classpath (Iceberg runtime,
+    delta-spark, or the tests' LocalLake catalog); the DataFrame semantics
+    it must produce are :class:`FrameTableSink`'s, which the oracle gate
+    verifies.
     """
 
     def __init__(
@@ -442,13 +458,13 @@ class SqlTableSink(TableSink):
         )
 
     def append(self, cfg, df):
-        self._guard(
-            "append",
-            lambda: df.writeTo(self._qualified(cfg.db, cfg.table))
-            .option("merge-schema", "true")
-            .option("check-ordering", "false")
-            .append(),
-        )
+        def _do():
+            self.create_if_not_exists(cfg, df.schema)
+            df.writeTo(self._qualified(cfg.db, cfg.table)).option(
+                "merge-schema", "true"
+            ).option("check-ordering", "false").append()
+
+        self._guard("append", _do)
 
     def _with_view(self, df: DataFrame, suffix: str, fn) -> None:
         view = f"tmp_{suffix}_{next(self._seq)}"
@@ -471,7 +487,14 @@ class SqlTableSink(TableSink):
             ):
                 df.sparkSession.sql(stmt)
 
-        self._guard("merge", lambda: self._with_view(df, f"{cfg.table}_u", _run))
+        def _do():
+            # the reference creates before MERGE
+            # (transaction_log_util.py:202-214): a catalog can't merge
+            # into a missing table
+            self.create_if_not_exists(cfg, df.schema)
+            self._with_view(df, f"{cfg.table}_u", _run)
+
+        self._guard("merge", _do)
 
     def delete(self, cfg, keys_df, ts_guard=None):
         target = self._qualified(cfg.db, cfg.table)
@@ -496,14 +519,14 @@ class SqlTableSink(TableSink):
         spark.sql(build_compaction_sql(self.catalog, db, table, using=self.using))
 
 
-class ParquetTableSink(TableSink):
+class ParquetTableSink(FrameTableSink):
     """Parquet-directory sink: each table is ``<root>/<db>/<table>``.
 
-    Locally stands in for the Iceberg/Delta table; merge/delete are
-    read-modify-overwrite (copy-on-write semantics — the reference's
-    default ``write.merge.mode``, ``tables.json:6-8``).  On a real
-    lakehouse the same pipeline calls a MERGE-capable sink with the SQL
-    generated by :func:`build_merge_sql`/:func:`build_delete_sql`.
+    Locally stands in for the Iceberg/Delta table; the shared
+    :class:`FrameTableSink` merge/delete are read-modify-overwrite here
+    (copy-on-write — the reference's default ``write.merge.mode``,
+    ``tables.json:6-8``), an append adding no column writes only the new
+    rows, and a first append or merge writes the table's directory.
 
     Each rewrite swaps the table by rename-aside
     (:func:`~cdc_data_lake_pyspark_spark.store.replace_store`), Iceberg's
@@ -532,70 +555,13 @@ class ParquetTableSink(TableSink):
         recover_halfswap(path)
         return spark.read.parquet(path)
 
-    def create_if_not_exists(self, cfg, schema):
+    def _save(self, cfg, df, add=False):
         path = self._path(cfg.db, cfg.table)
-        if not self.exists(cfg.db, cfg.table):
-            from cdc_data_lake_pyspark_spark.localrel import empty_frame
-
-            spark = SparkSession.getActiveSession()
-            empty_frame(spark, schema).write.mode("overwrite").parquet(path)
-
-    def append(self, cfg, df):
-        def _do():
-            path = self._path(cfg.db, cfg.table)
-            spark = df.sparkSession
-            if self.exists(cfg.db, cfg.table):
-                base_schema = spark.read.parquet(path).schema
-                evolved = merge_schemas(base_schema, df.schema)
-                if [f.name for f in evolved.fields] != [
-                    f.name for f in base_schema.fields
-                ]:
-                    # schema evolution: rewrite base with the union schema
-                    base = align_to_schema(spark.read.parquet(path), evolved)
-                    self._overwrite(base.unionByName(align_to_schema(df, evolved)), path)
-                    return
-                align_to_schema(df, base_schema).write.mode("append").parquet(path)
-            else:
-                df.write.mode("append").parquet(path)
-
-        self._guard("append", _do)
-
-    def merge(self, cfg, df, ts_guard=None):
-        def _do():
-            path = self._path(cfg.db, cfg.table)
-            spark = df.sparkSession
-            if not self.exists(cfg.db, cfg.table):
-                df.write.mode("overwrite").parquet(path)
-                return
-            base = spark.read.parquet(path)
-            evolved = merge_schemas(base.schema, df.schema)
-            merged = merge_into(
-                align_to_schema(base, evolved),
-                align_to_schema(df, evolved),
-                cfg.primary_keys,
-                ts_guard=ts_guard,
-            )
-            self._overwrite(merged, path)
-
-        self._guard("merge", _do)
-
-    def delete(self, cfg, keys_df, ts_guard=None):
-        def _do():
-            path = self._path(cfg.db, cfg.table)
-            if not self.exists(cfg.db, cfg.table):
-                return
-            spark = keys_df.sparkSession
-            base = spark.read.parquet(path)
-            self._overwrite(
-                delete_matching(base, keys_df, cfg.primary_keys, ts_guard=ts_guard),
-                path,
-            )
-
-        self._guard("delete", _do)
-
-    def _overwrite(self, df: DataFrame, path: str) -> None:
-        # Copy-on-write without self-read hazard: write beside, then swap.
-        replace_store(path, df.write.mode("overwrite").parquet)
+        if add:
+            df.write.mode("append").parquet(path)
+        else:
+            # copy-on-write without self-read hazard: write beside, then swap
+            replace_store(path, df.write.mode("overwrite").parquet)
 
     def compact(self, db: str, table: str, target_files: int = 1) -> int:
         """Rewrite the table into ``target_files`` files and return the
@@ -604,14 +570,14 @@ class ParquetTableSink(TableSink):
         stand-in for Iceberg's ``rewrite_data_files`` / Delta's
         ``OPTIMIZE`` (the reference leaves this to the lakehouse).
         """
-        path = self._path(db, table)
         if not self.exists(db, table):
             return 0
-        before = len(
-            [f for f in os.listdir(path) if f.endswith(".parquet")]
-        )
-        spark = SparkSession.getActiveSession()
-        df = spark.read.parquet(path)
-        self._overwrite(df.coalesce(target_files), path)
-        after = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-        return max(before - after, 0)
+        path = self._path(db, table)
+        before = _parquet_files(path)
+        df = SparkSession.getActiveSession().read.parquet(path).coalesce(target_files)
+        replace_store(path, df.write.mode("overwrite").parquet)
+        return max(before - _parquet_files(path), 0)
+
+
+def _parquet_files(path: str) -> int:
+    return sum(f.endswith(".parquet") for f in os.listdir(path))

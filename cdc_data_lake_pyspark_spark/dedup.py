@@ -30,7 +30,7 @@ columns; callers that need byte-stable output should pass a unique column
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -74,9 +74,3 @@ def latest_change_per_key(
         .select("_row.*")
     )
     return deduped
-
-
-def drop_after_dedup(df: DataFrame, cols: Iterable[str]) -> DataFrame:
-    """Reference drops helper columns post-dedup (``.drop("_rank","ts_ms")``,
-    ``transaction_log_util.py:273``) — P8."""
-    return df.drop(*cols)

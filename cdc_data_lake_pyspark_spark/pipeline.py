@@ -32,6 +32,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from cdc_data_lake_pyspark_spark.concurrency import overlap_jobs
@@ -75,15 +76,12 @@ class CdcPipeline:
         enables the guard using the envelope timestamp, which is then
         retained in the sink table — fixing the reference's silent
         last-batch-wins bug, SURVEY §2.5).
-    schema_sample_rows : rows used for payload-schema inference
-        (None = whole slice; 1 = reference's first-row behavior).
     """
 
     config: TablesConfig
     sink: TableSink
     cdc_format: str = "debezium"
     ts_guard: Optional[str] = None
-    schema_sample_rows: Optional[int] = None
     # Tables in a batch are independent — apply them concurrently from a
     # small thread pool so per-table sink flushes overlap instead of
     # paying serial job-submission latency (1 = sequential).  Threads only
@@ -161,25 +159,15 @@ class CdcPipeline:
 
     # -- route appliers -------------------------------------------------
 
-    def _parse_after(self, sliced: DataFrame, keep: list[str]) -> DataFrame:
-        """ONE distributed JSON pass over a route slice: fused infer+parse
-        (envelope columns ride inside the same pass) — or the reference's
-        sampled two-step when ``schema_sample_rows`` is set."""
-        if self.schema_sample_rows is None:
-            return infer_and_parse_json(sliced, "after", keep_cols=keep)
-        schema = infer_json_schema(
-            sliced, "after", sample_rows=self.schema_sample_rows
-        )
-        return parse_payload(sliced, "after", schema, keep_cols=keep)
-
     def _apply_insert(self, cfg, tbl: DataFrame) -> None:
         sliced = tbl.filter(F.col("route") == ROUTE_INSERT)
         keep = ["ts_ms"] if self.ts_guard else []
-        payload = self._parse_after(sliced, keep)
+        # ONE distributed JSON pass: fused infer+parse, with the envelope
+        # columns riding inside the same pass
+        payload = infer_and_parse_json(sliced, "after", keep_cols=keep)
         payload = cast_timestamp_fields(payload, cfg.timestamp_fields)
         if self.ts_guard:
             payload = payload.withColumnRenamed("ts_ms", self.ts_guard)
-        self.sink.create_if_not_exists(cfg, payload.schema)
         self.sink.append(cfg, payload)
         logger.info("insert applied: %s", cfg.qualified_name)
 
@@ -192,7 +180,7 @@ class CdcPipeline:
         # :138-145) via a post-parse projection/cast — NOT a second parse;
         # columns first appearing in an update still evolve (the
         # reference's MERGE path silently drops them — SURVEY §1.3/§8).
-        payload = self._parse_after(sliced, ["ts_ms"])
+        payload = infer_and_parse_json(sliced, "after", keep_cols=["ts_ms"])
         if self.sink.exists(cfg.db, cfg.table):
             target_schema = self.sink.read(spark, cfg.db, cfg.table).schema
             evolved = merge_schemas(
@@ -221,10 +209,9 @@ class CdcPipeline:
         else:
             # reference drops ts_ms before MERGE (:273)
             deduped = deduped.drop("ts_ms")
-        # an upsert-only stream must still create the table (the reference
-        # creates before MERGE, transaction_log_util.py:202-214; catalog
-        # sinks can't merge into a missing table)
-        self.sink.create_if_not_exists(cfg, deduped.schema)
+        # an upsert-only stream still creates the table: the sink's merge
+        # creates a missing one (the reference creates before MERGE,
+        # transaction_log_util.py:202-214)
         self.sink.merge(
             cfg, deduped, **({"ts_guard": self.ts_guard} if self.ts_guard else {})
         )
@@ -242,16 +229,12 @@ class CdcPipeline:
             # against a missing table
             logger.info("delete skipped (no table): %s", cfg.qualified_name)
             return
-        target_pk_schema = None
         target_schema = self.sink.read(tbl.sparkSession, cfg.db, cfg.table).schema
         pk_fields = [f for f in target_schema.fields if f.name in cfg.primary_keys]
         if len(pk_fields) == len(cfg.primary_keys):
-            from pyspark.sql import types as T
-
-            target_pk_schema = T.StructType(pk_fields)
-        schema = target_pk_schema or infer_json_schema(
-            sliced, "before", sample_rows=self.schema_sample_rows
-        )
+            schema = T.StructType(pk_fields)
+        else:
+            schema = infer_json_schema(sliced, "before")
         payload = parse_payload(sliced, "before", schema, keep_cols=["ts_ms"])
         # Only the PK columns matter for DELETE ... WHERE EXISTS; dedup to
         # the latest per key first so delete-then-reinsert batches resolve
@@ -274,7 +257,5 @@ class CdcPipeline:
 
 
 def _strip_fields(schema, names):
-    from pyspark.sql import types as T
-
     names = {n for n in names if n}
     return T.StructType([f for f in schema.fields if f.name not in names])

@@ -52,20 +52,13 @@ def with_route(changes: DataFrame) -> DataFrame:
 def route_changes(changes: DataFrame) -> dict[str, DataFrame]:
     """Split a canonical change-event frame into the three routes.
 
-    Pure filters — no shuffle; Catalyst pushes them into the (cached)
-    batch scan.
+    Pure filters on :func:`with_route`'s column — no shuffle; Catalyst
+    pushes them into the (cached) batch scan.
     """
-    op = F.col("op")
+    routed = with_route(changes)
     return {
-        ROUTE_INSERT: changes.filter(
-            op.isin(*INSERT_OPS) & F.col("after").isNotNull()
-        ),
-        ROUTE_UPSERT: changes.filter(
-            op.isin(*UPSERT_OPS) & F.col("after").isNotNull()
-        ),
-        ROUTE_DELETE: changes.filter(
-            op.isin(*DELETE_OPS) & F.col("before").isNotNull()
-        ),
+        r: routed.filter(F.col("route") == r).drop("route")
+        for r in (ROUTE_INSERT, ROUTE_UPSERT, ROUTE_DELETE)
     }
 
 

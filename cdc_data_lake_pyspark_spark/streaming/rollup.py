@@ -94,7 +94,6 @@ def start_continuous_rollup(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        sink.create_if_not_exists(cfg, batch_df.schema)
         sink.merge(cfg, batch_df)
         sink.flush(cfg)
 

@@ -184,10 +184,13 @@ def test_parallel_apply_failure_is_contained(spark, caplog):
     # it was already in flight (not silently dropped)
     sink2 = FailingSink(["a", "f"])
     pipe2 = CdcPipeline(config=cfg, sink=sink2, max_parallel_tables=6)
-    with caplog.at_level(logging.WARNING, "cdc_data_lake_pyspark_spark.pipeline"):
+    logger = "cdc_data_lake_pyspark_spark.concurrency"
+    with caplog.at_level(logging.WARNING, logger):
         with pytest.raises(RuntimeError, match="boom:"):
             pipe2.process_batch(batch)
-    assert any("also failed" in r.getMessage() for r in caplog.records)
+    assert any(
+        r.name == logger and "also failed" in r.getMessage() for r in caplog.records
+    )
 
 
 def test_empty_batch_short_circuit(spark):

@@ -7,14 +7,20 @@ routes apply in insert → upsert → delete order within a batch; the upsert
 route dedups to the latest change per key by ts_ms; merge replaces every
 existing row of a matched key with the single update row; delete drops
 every row whose key appears on the delete route.
+
+Each example's events are split into two batches, so the second batch
+merges into and deletes from the table the first one created; the same
+assertion runs over the in-memory and the parquet sink.
 """
 
 import json
+import tempfile
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from cdc_data_lake_pyspark_spark.apply import MemoryTableSink
+from cdc_data_lake_pyspark_spark.apply import MemoryTableSink, ParquetTableSink
 from cdc_data_lake_pyspark_spark.pipeline import CdcPipeline
 
 CONFIG = [{"db": "testdb", "table": "t", "primary_key": "k"}]
@@ -43,37 +49,41 @@ def _envelope(key: int, op: str, val: int, ts: int) -> str:
     )
 
 
-def _expected(events) -> list[tuple[int, int]]:
-    """The reduction model: sorted (k, v) multiset of the final state."""
-    ins = [(k, v) for (k, op, v) in events if op in ("r", "c")]
-    ups: dict[int, tuple[int, int]] = {}
-    for ts, (k, op, v) in enumerate(events):
-        if op == "u":
-            ups[k] = (k, v)  # later event (higher ts) wins
-    dels = {k for (k, op, v) in events if op == "d"}
-    after_merge = [p for p in ins if p[0] not in ups] + list(ups.values())
-    return sorted(p for p in after_merge if p[0] not in dels)
+def _expected(batches) -> list[tuple[int, int]]:
+    """The reduction model, folded batch by batch over the (k, v) multiset
+    of the table's rows; returns the sorted final state."""
+    rows: list[tuple[int, int]] = []
+    for events in batches:
+        rows += [(k, v) for (k, op, v) in events if op in ("r", "c")]
+        ups: dict[int, tuple[int, int]] = {}
+        for k, op, v in events:
+            if op == "u":
+                ups[k] = (k, v)  # later event (higher ts) wins
+        dels = {k for (k, op, v) in events if op == "d"}
+        rows = [p for p in rows if p[0] not in ups] + list(ups.values())
+        rows = [p for p in rows if p[0] not in dels]
+    return sorted(rows)
 
 
+SINKS = {"memory": lambda root: MemoryTableSink(), "parquet": ParquetTableSink}
+
+
+@pytest.mark.parametrize("kind", sorted(SINKS))
 @settings(
-    max_examples=12,
+    max_examples=5,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(events=events_strategy)
-def test_random_batches_match_reduction_model(spark, events):
-    values = [
-        (_envelope(k, op, v, ts),) for ts, (k, op, v) in enumerate(events)
-    ]
-    sink = MemoryTableSink()
+@given(events=events_strategy, data=st.data())
+def test_random_batches_match_reduction_model(spark, tmp_path, kind, events, data):
+    cut = data.draw(st.integers(min_value=0, max_value=len(events)), label="cut")
+    sink = SINKS[kind](tempfile.mkdtemp(dir=tmp_path))
     pipe = CdcPipeline(config=CONFIG, sink=sink)
-    if values:
-        batch = spark.createDataFrame(values, "value string")
-        pipe.process_batch(batch)
-    if ("testdb", "t") in sink.tables:
-        got = sorted(
-            (r.k, r.v) for r in sink.read(spark, "testdb", "t").collect()
-        )
-    else:
-        got = []
-    assert got == _expected(events)
+    values = [(_envelope(k, op, v, ts),) for ts, (k, op, v) in enumerate(events)]
+    for batch_id, batch in enumerate([values[:cut], values[cut:]]):
+        if batch:
+            pipe.process_batch(spark.createDataFrame(batch, "value string"), batch_id)
+    got = []
+    if sink.exists("testdb", "t"):
+        got = sorted((r.k, r.v) for r in sink.read(spark, "testdb", "t").collect())
+    assert got == _expected([events[:cut], events[cut:]])
