@@ -535,7 +535,11 @@ class ParquetTableSink(FrameTableSink):
     repair a half-finished swap before they answer, so a replayed merge
     or delete converges.  Appends are not guarded: replaying a batch
     whose append already landed appends its rows again, so the insert
-    route stays at-least-once (as in the reference).
+    route stays at-least-once (as in the reference).  The sink does not
+    yet follow :mod:`~cdc_data_lake_pyspark_spark.store`'s batch-commit
+    rule: direct callers of ``CdcPipeline.process_batch`` reuse its
+    default ``batch_id=0`` across batches, so a marker keyed on the
+    batch id would silently skip every batch after their first.
     """
 
     def __init__(self, root: str, continue_on_error: bool = False):

@@ -28,7 +28,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cdc_data_lake_pyspark_spark.functions.text import shingles, tokens
-from cdc_data_lake_pyspark_spark.store import recover_halfswap, replace_store
+from cdc_data_lake_pyspark_spark.store import (
+    compact_store,
+    recover_halfswap,
+    tag_writer,
+    without_writer,
+)
 
 
 def exact_dedup(
@@ -1313,10 +1318,10 @@ def load_minhash_index(
     the day-granularity replay-leak exclusion: a daily job re-running
     day k after a crash that landed day k's append must not probe
     against the dead attempt's own leaked signatures (they would drop
-    every day-k keeper as an estimate-1.0 self-duplicate).  Null-SAFE:
-    untagged rows (the bootstrap save, untagged appends) are history
-    and stay candidates — the streaming gates' batch-scoped discipline
-    at day granularity."""
+    every day-k keeper as an estimate-1.0 self-duplicate).  It is
+    :func:`~cdc_data_lake_pyspark_spark.store.without_writer`, so
+    untagged rows (the bootstrap save, untagged appends) stay
+    candidates."""
     for sub in ("signatures", "buckets", "params"):
         recover_halfswap(f"{path}/{sub}")
     params_rows = spark.read.parquet(f"{path}/params").collect()
@@ -1359,11 +1364,7 @@ def load_minhash_index(
                 f"minhash index {what} schema drifted: {got} != {want}"
             )
         if exclude_writer is not None and "batch_id" in frame.columns:
-            frame = frame.filter(
-                ~F.col("batch_id").eqNullSafe(
-                    F.lit(int(exclude_writer)).cast("long")
-                )
-            )
+            frame = without_writer(frame, exclude_writer)
         checked.append(frame.drop("batch_id"))
     sigs, buckets = checked
     return MinHashIndex(
@@ -1545,41 +1546,6 @@ def _refuse_live_gate_store(spark: SparkSession, d: str, api: str) -> None:
         )
 
 
-def _swap_compact_store(
-    spark: SparkSession,
-    d: str,
-    schema,
-    target_files: int,
-    partition_col: Optional[str] = None,
-    fold=None,
-) -> None:
-    """Rewrite one parquet append-store as ``target_files`` files with
-    duplicate rows folded, behind the crash-recoverable swap of
-    :func:`~cdc_data_lake_pyspark_spark.store.replace_store`.
-
-    ``fold`` is the rewrite's reduction (DataFrame → DataFrame); the
-    default folds EXACT duplicate rows (``distinct`` — correct for
-    idempotent stores: signatures, buckets, digests, kept sets).  A
-    store whose rows are per-period SUFFICIENT STATISTICS (duplicate
-    rows must all count) passes an aggregating fold instead — the
-    VERDICT r13 #4 host-stats refold sums days 0..k into one snapshot
-    row per key, which is read-equivalent under the store's own
-    downstream aggregate, never under distinct."""
-    import os
-
-    recover_halfswap(d)
-    if not os.path.isdir(d):
-        return  # store not created yet — nothing to compact
-    df = spark.read.schema(schema).parquet(d)
-    df = (fold(df) if fold is not None else df.distinct()).coalesce(
-        target_files
-    )
-    writer = df.write.mode("overwrite")
-    if partition_col is not None:
-        writer = writer.partitionBy(partition_col)
-    replace_store(d, writer.parquet)
-
-
 def append_to_minhash_index(
     index_dir: str,
     docs: DataFrame,
@@ -1628,7 +1594,8 @@ def append_to_minhash_index(
     non-null writer ids is thereafter the writer's to compact (the
     batch :func:`compact_minhash_index` refuses it — its fixed schema
     would erase the exclusion key; use a batch_id-preserving
-    :func:`_swap_compact_store`, as ``daily_refresh_loop`` does)."""
+    :func:`~cdc_data_lake_pyspark_spark.store.compact_store`, as
+    ``daily_refresh_loop`` does)."""
     spark = docs.sparkSession
     index = load_minhash_index(spark, index_dir)
     new = docs.select(
@@ -1643,37 +1610,45 @@ def append_to_minhash_index(
     sigs = _stage(
         minhash_signatures(new, num_hashes=index.num_hashes, k=index.k)
     )
+    _append_signatures(index_dir, sigs, index, writer_id)
+
+
+def _append_signatures(
+    index_dir: str,
+    sigs: DataFrame,
+    layout: MinHashIndex,
+    writer_id: Optional[int] = None,
+) -> None:
+    """Append already-computed ``(doc_id, sig)`` rows and their banded
+    buckets to the index at ``index_dir``, in ``layout``'s banding and
+    bucket partitioning, each row tagged with ``writer_id`` when given.
+    ``sigs`` is read twice, so the caller stages it.  The one writer of
+    both :func:`append_to_minhash_index` and the streaming near-dup
+    gate.
+
+    Signatures are written FIRST (VERDICT r13 #2): a signature without
+    bucket rows is inert — it can never become a candidate, so a crash
+    between the two appends leaves a store whose probes are identical
+    to the pre-append store, and the retry heals it (duplicate rows
+    fold).  The reverse order left orphan BUCKET rows whose candidate
+    pairs silently dropped in _estimate_filter's signature join —
+    probes in the crash window MISSED near-dups of the half-appended
+    docs (pinned in tests/test_index_persistence.py)."""
+    tagged = sigs if writer_id is None else tag_writer(sigs, writer_id)
+    tagged.write.mode("append").parquet(f"{index_dir}/signatures")
+    banded = _banded(sigs, layout.bands, layout.rows_per_band)
     if writer_id is not None:
-        sigs = sigs.withColumn(
-            "batch_id", F.lit(int(writer_id)).cast("long")
-        )
-    # signatures are written FIRST (VERDICT r13 #2): a signature without
-    # bucket rows is inert — it can never become a candidate, so a crash
-    # between the two appends leaves a store whose probes are identical
-    # to the pre-append store, and the retry heals it (duplicate rows
-    # fold).  The reverse order left orphan BUCKET rows whose candidate
-    # pairs silently dropped in _estimate_filter's signature join —
-    # probes in the crash window MISSED near-dups of the half-appended
-    # docs (pinned in tests/test_index_persistence.py).
-    sigs.write.mode("append").parquet(f"{index_dir}/signatures")
-    banded = _banded(
-        sigs.drop("batch_id"), index.bands, index.rows_per_band
-    )
-    if writer_id is not None:
-        banded = banded.withColumn(
-            "batch_id", F.lit(int(writer_id)).cast("long")
-        )
-    if index.bucket_partitions > 0:
-        banded.withColumn(
-            "_pfx",
-            F.pmod(
-                F.col("bucket"), F.lit(index.bucket_partitions)
-            ).cast("int"),
-        ).write.mode("append").partitionBy("_pfx").parquet(
-            f"{index_dir}/buckets"
+        banded = tag_writer(banded, writer_id)
+    if layout.bucket_partitions > 0:
+        pfx = F.pmod(F.col("bucket"), F.lit(layout.bucket_partitions))
+        writer = (
+            banded.withColumn("_pfx", pfx.cast("int"))
+            .write.mode("append")
+            .partitionBy("_pfx")
         )
     else:
-        banded.write.mode("append").parquet(f"{index_dir}/buckets")
+        writer = banded.write.mode("append")
+    writer.parquet(f"{index_dir}/buckets")
 
 
 def compact_minhash_index(
@@ -1686,10 +1661,11 @@ def compact_minhash_index(
     ``target_files`` files each (per hive partition for a
     ``bucket_partitions > 0`` bucket store), folding exact duplicate
     rows, behind the crash-recoverable swap of
-    :func:`_swap_compact_store`.  Probe results are IDENTICAL before
-    and after: candidate discovery distincts pairs and duplicate
-    signature rows only duplicate estimate rows that fold downstream
-    (pinned in tests/test_index_persistence.py).  Run between probe
+    :func:`~cdc_data_lake_pyspark_spark.store.compact_store`.  Probe
+    results are IDENTICAL before and after: candidate discovery
+    distincts pairs and duplicate signature rows only duplicate
+    estimate rows that fold downstream (pinned in
+    tests/test_index_persistence.py).  Run between probe
     jobs — the artifact is single-writer by the daily-pipeline
     contract.
 
@@ -1711,10 +1687,10 @@ def compact_minhash_index(
     if index.bucket_partitions > 0:
         bucket_schema += ", _pfx INT"
         partition_col = "_pfx"
-    _swap_compact_store(
+    compact_store(
         spark, f"{index_dir}/signatures", sig_schema, target_files
     )
-    _swap_compact_store(
+    compact_store(
         spark,
         f"{index_dir}/buckets",
         bucket_schema,

@@ -29,7 +29,13 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from cdc_data_lake_pyspark_spark.store import replace_store
+from cdc_data_lake_pyspark_spark.store import (
+    compact_store,
+    recover_halfswap,
+    replace_store,
+    tag_writer,
+    without_writer,
+)
 
 
 def _as_double(vec: Column) -> Column:
@@ -1479,10 +1485,9 @@ def load_ivf_corpus_index(spark, path: str, exclude_writer=None):
 
     ``exclude_writer`` (VERDICT r14 #5): drop rows APPENDED under that
     writer id (``append_to_ivf_corpus_index(..., writer_id=...)``) —
-    the day-granularity replay-leak exclusion, null-safe so untagged
-    bootstrap/append rows stay probe-visible (the
+    the day-granularity replay-leak exclusion,
+    :func:`~cdc_data_lake_pyspark_spark.store.without_writer` (the
     ``load_minhash_index`` twin)."""
-    from cdc_data_lake_pyspark_spark.store import recover_halfswap
 
     for sub in ("encoded", "centers", "codebooks"):
         recover_halfswap(f"{path}/{sub}")
@@ -1496,11 +1501,7 @@ def load_ivf_corpus_index(spark, path: str, exclude_writer=None):
             "ivf corpus index schema drifted: batch_id is not bigint"
         )
     if exclude_writer is not None and "batch_id" in encoded.columns:
-        encoded = encoded.filter(
-            ~F.col("batch_id").eqNullSafe(
-                F.lit(int(exclude_writer)).cast("long")
-            )
-        )
+        encoded = without_writer(encoded, exclude_writer)
     encoded = encoded.drop("batch_id")
     if got != _CORPUS_INDEX_SCHEMA:
         raise ValueError(
@@ -1534,9 +1535,7 @@ def append_to_ivf_corpus_index(
     prefit, _ = load_ivf_corpus_index(spark, path)  # validates layout
     enc = _ivf_encode_frame(vectors, prefit, id_col, vec_col)
     if writer_id is not None:
-        enc = enc.withColumn(
-            "batch_id", F.lit(int(writer_id)).cast("long")
-        )
+        enc = tag_writer(enc, writer_id)
     enc.write.mode("append").partitionBy("cell").parquet(
         f"{path}/encoded"
     )
@@ -1554,14 +1553,13 @@ def compact_ivf_corpus_index(
     ``compact()``."""
     from cdc_data_lake_pyspark_spark.operators.dedup_text import (
         _refuse_live_gate_store,
-        _swap_compact_store,
     )
 
     load_ivf_corpus_index(spark, path)  # validates before rewriting
     _refuse_live_gate_store(
         spark, f"{path}/encoded", "compact_ivf_corpus_index"
     )
-    _swap_compact_store(
+    compact_store(
         spark,
         f"{path}/encoded",
         "vec_id BIGINT, embedding ARRAY<DOUBLE>, codes ARRAY<INT>, "

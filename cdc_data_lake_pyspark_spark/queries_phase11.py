@@ -84,6 +84,14 @@ from cdc_data_lake_pyspark_spark.queries_phase10 import (
     N_BUCKETS,
     _SEED_PCT,
 )
+from cdc_data_lake_pyspark_spark.store import (
+    commit,
+    compact_store,
+    markers,
+    recover_halfswap,
+    tag_writer,
+    without_writer,
+)
 
 #: cross-day near-dup threshold (exact Jaccard over 3-shingles)
 _ND_THRESHOLD = 0.8
@@ -623,12 +631,8 @@ def refold_host_stats(
     and emits the snapshot under ``_day`` NULL — which every later
     day's null-safe own-day exclusion keeps, exactly like an untagged
     bootstrap row."""
-    from cdc_data_lake_pyspark_spark.operators.dedup_text import (
-        _swap_compact_store,
-    )
-
     if day_tagged:
-        _swap_compact_store(
+        compact_store(
             spark,
             hosts_dir,
             "_host STRING, _n BIGINT, _u BIGINT, _day INT",
@@ -639,7 +643,7 @@ def refold_host_stats(
             .withColumn("_day", F.lit(None).cast("int")),
         )
         return
-    _swap_compact_store(
+    compact_store(
         spark,
         hosts_dir,
         "_host STRING, _n BIGINT, _u BIGINT",
@@ -714,7 +718,8 @@ def daily_refresh_loop(
     the soak tool, the r12 lesson).
 
     RESTART CONTRACT (``exactly_once=True``, VERDICT r14 #5 — the
-    streaming gates' discipline at day granularity): a SEVENTH
+    batch-commit rule of :mod:`~cdc_data_lake_pyspark_spark.store` at
+    day granularity): a SEVENTH
     persisted artifact, the per-day manifest (``days/``, one row per
     completed day, written LAST), plus a persisted ``keepers/`` store,
     make re-invoking the loop over an existing ``work_dir`` converge:
@@ -806,10 +811,6 @@ def daily_refresh_loop(
     manifested: set = set()
     input_fp: tuple = (None, None)
     if exactly_once:
-        import os as _os
-
-        from cdc_data_lake_pyspark_spark.store import recover_halfswap
-
         # input fingerprint (ADVICE r15): an order-independent content
         # digest + row count of the input frame, recorded with every
         # day's manifest row.  Without it, re-invoking over an existing
@@ -823,32 +824,25 @@ def daily_refresh_loop(
             F.count(F.lit(1)).alias("_rows"),
         ).collect()[0]
         input_fp = (fp_row["_fp"], fp_row["_rows"])
-        recover_halfswap(days_dir)
-        if _os.path.isdir(days_dir):
-            # bounded collect: one row per completed day.  Pre-r16
-            # manifests carry only _day; their _fp/_rows read as NULL
-            # and are exempt from the fingerprint check.
-            rows = (
-                spark.read.schema("_day INT, _fp BIGINT, _rows BIGINT")
-                .parquet(days_dir)
-                .collect()
+        # bounded collect: one row per completed day.  Pre-r16
+        # manifests carry only _day; their _fp/_rows read as NULL
+        # and are exempt from the fingerprint check.
+        rows = markers(spark, days_dir, "_day", ("_fp", "_rows")).collect()
+        manifested = {r["_day"] for r in rows}
+        stale = {
+            (r["_fp"], r["_rows"])
+            for r in rows
+            if r["_rows"] is not None and (r["_fp"], r["_rows"]) != input_fp
+        }
+        if stale:
+            raise ValueError(
+                f"daily_refresh_loop: work_dir {work_dir!r} holds "
+                f"day manifests written from a DIFFERENT input "
+                f"frame (stored fingerprint(s) {sorted(stale)} != "
+                f"current {input_fp}); skipping those days would "
+                "return stale keepers.  Use a fresh work_dir for a "
+                "new input, or re-invoke with the original frame."
             )
-            manifested = {r["_day"] for r in rows}
-            stale = {
-                (r["_fp"], r["_rows"])
-                for r in rows
-                if r["_rows"] is not None
-                and (r["_fp"], r["_rows"]) != input_fp
-            }
-            if stale:
-                raise ValueError(
-                    f"daily_refresh_loop: work_dir {work_dir!r} holds "
-                    f"day manifests written from a DIFFERENT input "
-                    f"frame (stored fingerprint(s) {sorted(stale)} != "
-                    f"current {input_fp}); skipping those days would "
-                    "return stale keepers.  Use a fresh work_dir for a "
-                    "new input, or re-invoke with the original frame."
-                )
     outs = []
     for k in range(n_days):
         if k in manifested:
@@ -881,14 +875,10 @@ def daily_refresh_loop(
             F.countDistinct("_c").alias("_u"),
         )
         if exactly_once:
-            # the writer-day tag: the exactly-once key for this store —
-            # a crash-rerun of day k excludes _day = k (its own dead
-            # attempt's leak), and the _day-scoped distinct below folds
-            # any double-appended day's byte-identical row set while two
-            # LEGITIMATE days with identical stats still both count
-            day_stats = day_stats.withColumn(
-                "_day", F.lit(k).cast("int")
-            )
+            # the _day-scoped distinct below folds a double-appended
+            # day's byte-identical row set, while two LEGITIMATE days
+            # with identical stats still both count
+            day_stats = tag_writer(day_stats, k, "_day")
         if k == 0:
             # bootstrap: day 0 gates under its own crawl's stats
             day_stats.write.mode("overwrite").parquet(hosts_dir)
@@ -899,9 +889,7 @@ def daily_refresh_loop(
                     "_day", F.lit(None).cast("int")
                 )
             if k > 0:
-                hosts_hist = hosts_hist.filter(
-                    ~F.col("_day").eqNullSafe(F.lit(k))
-                )
+                hosts_hist = without_writer(hosts_hist, k, "_day")
             hosts_hist = hosts_hist.distinct()
         good = (
             hosts_hist
@@ -929,18 +917,15 @@ def daily_refresh_loop(
         else:
             # the persisted seen-URL digest store: 16-byte md5 anti-join
             # (repair a half-finished compaction swap before reading)
-            from cdc_data_lake_pyspark_spark.store import recover_halfswap
-
             recover_halfswap(seen_dir)
             if exactly_once:
                 # exclude the day's own leaked digests (a dead attempt's
                 # append would otherwise anti-join away the entire day)
-                seen = (
-                    spark.read.schema("_cd STRING, _day INT")
-                    .parquet(seen_dir)
-                    .filter(~F.col("_day").eqNullSafe(F.lit(k)))
-                    .select("_cd")
-                )
+                seen = without_writer(
+                    spark.read.schema("_cd STRING, _day INT").parquet(seen_dir),
+                    k,
+                    "_day",
+                ).select("_cd")
             else:
                 seen = spark.read.schema("_cd string").parquet(seen_dir)
             frontier = (
@@ -1057,7 +1042,7 @@ def daily_refresh_loop(
         keepers = clean.join(keep.select("doc_id"), "doc_id", "left_semi")
         digests = canon.select(F.md5("_c").alias("_cd")).distinct()
         if exactly_once:
-            digests = digests.withColumn("_day", F.lit(k).cast("int"))
+            digests = tag_writer(digests, k, "_day")
         if k == 0:
             save_minhash_index(
                 minhash_index(keepers, text_col="main_text"), index_dir
@@ -1105,18 +1090,10 @@ def daily_refresh_loop(
                     f"injected crash: day {k} appends landed, manifest "
                     "not written (tests/test_daily_manifest.py)"
                 )
-            from cdc_data_lake_pyspark_spark.localrel import tiny_frame
-
-            tiny_frame(
-                spark,
-                [(k, input_fp[0], input_fp[1])],
-                "_day INT, _fp BIGINT, _rows BIGINT",
-            ).coalesce(1).write.mode("append").parquet(days_dir)
-        if compact_every and k > 0 and k % compact_every == 0:
-            from cdc_data_lake_pyspark_spark.operators.dedup_text import (
-                _swap_compact_store,
+            commit(
+                spark, days_dir, k, "_day", _fp=input_fp[0], _rows=input_fp[1]
             )
-
+        if compact_every and k > 0 and k % compact_every == 0:
             if exactly_once:
                 # tag-PRESERVING compaction (the batch compactors refuse
                 # writer-tagged stores by design — their fixed schemas
@@ -1126,24 +1103,24 @@ def daily_refresh_loop(
                 # row — the swap itself is crash-recoverable, and a
                 # crash between manifest and compaction just skips the
                 # maintenance until the next compaction day.
-                _swap_compact_store(
+                compact_store(
                     spark,
                     f"{index_dir}/signatures",
                     "doc_id BIGINT, sig ARRAY<BIGINT>, batch_id BIGINT",
                     4,
                 )
-                _swap_compact_store(
+                compact_store(
                     spark,
                     f"{index_dir}/buckets",
                     "doc_id BIGINT, band INT, bucket BIGINT, "
                     "batch_id BIGINT",
                     4,
                 )
-                _swap_compact_store(
+                compact_store(
                     spark, seen_dir, "_cd STRING, _day INT", 4
                 )
                 if embeddings is not None:
-                    _swap_compact_store(
+                    compact_store(
                         spark,
                         f"{vec_dir}/encoded",
                         "vec_id BIGINT, embedding ARRAY<DOUBLE>, "
@@ -1156,7 +1133,7 @@ def daily_refresh_loop(
                 # the seen-URL digest store accumulates one file set per
                 # day too; digests are idempotent (seen twice = seen), so
                 # the distinct-folding swap rewrite is verdict-preserving.
-                _swap_compact_store(spark, seen_dir, "_cd STRING", 4)
+                compact_store(spark, seen_dir, "_cd STRING", 4)
                 if embeddings is not None:
                     compact_ivf_corpus_index(spark, vec_dir)
             # the host-stats store is NOT distinct-compactable (two

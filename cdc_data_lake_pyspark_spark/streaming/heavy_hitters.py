@@ -20,15 +20,15 @@ Scale: the stored state is a CONSTANT ``depth × width`` cell grid no
 matter the stream's cardinality; each micro-batch shuffles once to
 build its own sketch (map-side combined) plus one broadcast-sized join
 of the batch's distinct keys against the grid.  The flagged-keys store
-appends only newly-hot keys.  Idempotence under checkpoint replay is
-two-layered: the batch-id ledger skips fully-applied batches before any
-state mutation, and — because the three state writes (cells, hot,
-ledger) are separate appends, not one atomic commit — each layer is
-individually replay-safe for a PARTIALLY applied batch: cells rows are
-stamped with their batch id and deduped per (batch_id, cell) on read,
-and the newly-hot append anti-joins against keys already flagged.  A
-crash between any two of the appends therefore converges to the same
-state once the batch replays.
+appends only newly-hot keys.
+
+Exactly-once: the batch-commit rule of
+:mod:`~cdc_data_lake_pyspark_spark.store`, with the ``ledger/`` marker
+written last.  The fold argument: cells rows carry their batch id and
+:meth:`StreamingHeavyHitters.cells` keeps one copy per ``(batch_id,
+cell)``, so a replayed batch's sketch counts once; the newly-hot append
+anti-joins the keys already flagged, so a key the dead attempt flagged
+is not flagged again.
 """
 
 from __future__ import annotations
@@ -41,7 +41,12 @@ from pyspark.sql import types as T
 
 from cdc_data_lake_pyspark_spark.functions.sketch import cms_sketch
 from cdc_data_lake_pyspark_spark.operators.relational import portable_id_hash
-from cdc_data_lake_pyspark_spark.store import read_store
+from cdc_data_lake_pyspark_spark.store import (
+    commit,
+    committed,
+    read_store,
+    tag_writer,
+)
 
 CELLS_SCHEMA = T.StructType(
     [
@@ -73,7 +78,7 @@ class StreamingHeavyHitters:
 
     ``cells_dir`` holds the merged grid, ``hot_dir`` the append-only log
     of (key, first estimate at crossing, batch id), ``ledger_dir`` the
-    processed-batch ids for replay idempotence.
+    batch-commit markers.
     """
 
     def __init__(
@@ -99,12 +104,10 @@ class StreamingHeavyHitters:
 
         Each appended cells row is stamped with its batch id, and the
         merge first collapses duplicate ``(batch_id, hash_row, bucket)``
-        rows to one copy.  That makes the grid idempotent under the one
-        non-atomic failure the ledger alone cannot cover: a crash AFTER
-        the cells append but BEFORE the ledger append means the replayed
-        batch re-appends an identical batch sketch (same checkpointed
-        offsets → same rows → same deterministic sketch); without the
-        stamp those cells would double-count forever.
+        rows to one copy: a crash after the cells append but before the
+        commit makes the replay re-append an identical sketch (same
+        checkpointed offsets, same rows), which would otherwise
+        double-count forever.
 
         Migration guard: a cells directory written BEFORE the batch_id
         stamp existed reads back with batch_id NULL.  Grouping those rows
@@ -140,12 +143,8 @@ class StreamingHeavyHitters:
     # ---------------------------------------------------------- write
     def process_batch(self, batch_df: DataFrame, batch_id: int = -1) -> None:
         spark = batch_df.sparkSession
-        ledger_schema = T.StructType(
-            [T.StructField("batch_id", T.LongType(), False)]
-        )
-        done = read_store(spark, self.ledger_dir, ledger_schema)
-        if done.filter(F.col("batch_id") == batch_id).limit(1).count() > 0:
-            return  # checkpoint replay: state already reflects this batch
+        if committed(spark, self.ledger_dir, batch_id):
+            return
 
         batch = batch_df.select(
             F.col(self.key_col).cast("string").alias("key")
@@ -153,10 +152,8 @@ class StreamingHeavyHitters:
 
         # 1. fold the batch's sketch into the grid (append-only; the
         #    read side merges by sum, so no read-modify-write race)
-        sketch = cms_sketch(
-            batch, "key", depth=self.depth, width=self.width
-        ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        sketch.write.mode("append").parquet(self.cells_dir)
+        sketch = cms_sketch(batch, "key", depth=self.depth, width=self.width)
+        tag_writer(sketch, batch_id).write.mode("append").parquet(self.cells_dir)
 
         # 2. flag this batch's keys whose cumulative estimate crossed
         #    the threshold and are not already in the hot ledger
@@ -187,12 +184,7 @@ class StreamingHeavyHitters:
         newly_hot = (
             est.filter(F.col("est") >= self.threshold)
             .join(self.hot_keys(spark).select("key"), "key", "left_anti")
-            .select("key", "est", F.lit(batch_id).cast("long").alias("batch_id"))
+            .select("key", "est")
         )
-        newly_hot.write.mode("append").parquet(self.hot_dir)
-
-        from cdc_data_lake_pyspark_spark.localrel import tiny_frame
-
-        tiny_frame(
-            spark, [(int(batch_id),)], ledger_schema
-        ).write.mode("append").parquet(self.ledger_dir)
+        tag_writer(newly_hot, batch_id).write.mode("append").parquet(self.hot_dir)
+        commit(spark, self.ledger_dir, batch_id)

@@ -20,27 +20,15 @@ invariance (pinned for the chain as a unit in
 the text stage by that gate's contract and never reaches the vector
 stage.
 
-Exactly-once across TWO stores — the cross-store crash seam (the one
-discipline the hand-wired chain left untested): the two stores commit
-INDEPENDENTLY, text first.  ``process_batch`` runs the text gate to
-completion (its manifest row is its own last write) before the vector
-gate starts, so under a crash anywhere the stores are at one of three
-states, every one of which converges on checkpoint replay (foreachBatch
-re-delivers the batch under the SAME batch_id):
-
-1. text store mid-batch (no text manifest): the vector gate never ran
-   for this batch; the text gate's replay-leak exclusion reproduces its
-   verdicts, then the chain proceeds normally.
-2. text store committed, vector store mid-batch or untouched — the
-   seam: the text gate replays as a manifest-guarded NO-OP, the
-   survivor set is RECOMPUTED deterministically from the text gate's
-   persisted kept store (``kept_docs``'s distinct folds any duplicate
-   kept rows), and the vector gate's own replay-leak exclusion
-   reproduces its verdicts over exactly that set.
-3. both committed: both manifests hit; the whole batch is a no-op.
-
-Convergence of both stores to the single-run state across seam (2) is
-pinned in ``tests/test_streaming_multimodal.py``.
+Exactly-once across TWO stores: each component gate follows the
+batch-commit rule of :mod:`~cdc_data_lake_pyspark_spark.store` on its
+own store, and ``process_batch`` runs the text gate to its commit
+before the vector gate starts.  The fold argument for the seam between
+the two commits (text committed, vector not): the replayed text gate
+is a no-op, and the survivor set is re-read from the text gate's kept
+store, whose distinct folds duplicate kept rows, so the vector gate
+re-runs over exactly the set the dead attempt handed on.  Convergence
+across that seam is pinned in ``tests/test_streaming_multimodal.py``.
 
 Scale: the sum of the component gates' shapes — per batch, one
 signature aggregate over batch text + one banded-bucket join against
@@ -67,7 +55,6 @@ from cdc_data_lake_pyspark_spark.streaming.neardup import (
     _require_integral_id,
 )
 from cdc_data_lake_pyspark_spark.streaming.vector_gate import (
-    ENCODED_SCHEMA,
     StreamingVectorDedupGate,
 )
 
@@ -292,20 +279,12 @@ class StreamingMultimodalGate:
         self, spark: SparkSession, exclude_batch_id: Optional[int] = None
     ):
         """Both stores' current probe-side state ``(text_index,
-        encoded_frame)`` with each gate's replay-leak exclusion applied
-        (null-safe: seeded rows with no writer batch_id stay
-        candidates) — the argument pair :meth:`batch_reduce` takes."""
-        text_index = self.text_gate.index(
-            spark, exclude_batch_id=exclude_batch_id
+        encoded_frame)``, each without the rows ``exclude_batch_id``
+        wrote — the argument pair :meth:`batch_reduce` takes."""
+        return (
+            self.text_gate.index(spark, exclude_batch_id=exclude_batch_id),
+            self.vector_gate.index(spark, exclude_batch_id=exclude_batch_id),
         )
-        encoded = self.vector_gate._read(spark, "encoded", ENCODED_SCHEMA)
-        if exclude_batch_id is not None:
-            encoded = encoded.filter(
-                ~F.col("batch_id").eqNullSafe(
-                    F.lit(int(exclude_batch_id)).cast("long")
-                )
-            )
-        return text_index, encoded.drop("batch_id")
 
     def batch_reduce(
         self, batch_df: DataFrame, text_index, encoded_index: DataFrame
@@ -333,12 +312,11 @@ class StreamingMultimodalGate:
 
     # -- the foreachBatch target -------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int = -1) -> None:
-        """Text stage to completion (its own manifest last), then the
-        vector stage over the survivors RE-READ from the text gate's
-        kept store — not from an in-memory handoff — so a replay that
-        finds the text stage already manifested recomputes the same
-        survivor set the dead attempt handed on (the cross-store seam;
-        module docstring, state 2)."""
+        """Text stage to its commit, then the vector stage over the
+        survivors RE-READ from the text gate's kept store — not from an
+        in-memory handoff — so a replay that finds the text stage
+        already committed recomputes the same survivor set the dead
+        attempt handed on (the cross-store seam; module docstring)."""
         _require_integral_id(
             batch_df, self.id_col, "StreamingMultimodalGate.process_batch"
         )

@@ -18,20 +18,16 @@ never depends on how the stream was sliced into micro-batches.  (A
 kept-only index would diverge on chains: with a ~ b ~ c but a ≁ c, one
 batch {a,b,c} and three batches {a},{b},{c} would disagree about c.)
 
-Exactly-once story: a PROCESSED-BATCH MANIFEST (``batches/``, one row
-per completed batch_id, written last) makes replay a no-op — the check
-is an equality pushed into a parquet scan whose size tracks the number
-of batches, NOT the corpus (VERDICT r11 #2: the previous id-level
-anti-join re-scanned the full signature store every micro-batch).
-foreachBatch replays a failed batch under the same batch_id (the
-Structured Streaming checkpoint contract), and a crash BETWEEN the
-appends and the manifest write converges because every index row
-carries the batch_id that wrote it and the replay excludes index rows
-FROM ITS OWN batch_id from candidacy (a precise replay-leak filter —
-ADVICE r12: the earlier doc_id-keyed exclusion both missed true
-near-dups on id collisions and double-kept legitimately re-delivered
-ids), while every duplicated append row folds downstream — see
-process_batch.
+Exactly-once: the batch-commit rule of
+:mod:`~cdc_data_lake_pyspark_spark.store` — the ``batches/`` marker is
+written last, and the index reads drop the rows of the batch's own dead
+attempt.  The fold argument for the rows such an attempt leaked: kept
+rows carry the same ``(doc_id, batch_id)`` and fold in
+:meth:`~StreamingNearDupGate.kept_docs`'s distinct; duplicate bucket
+rows fold in candidate discovery's distinct; duplicate signature rows
+only duplicate candidate pairs, which fold in the per-doc verdict
+aggregate; and a signature whose bucket rows did not land is never a
+candidate.
 
 Scale: per batch, signature construction touches BATCH text only (one
 map-side-combined aggregate); candidate discovery is one (band, bucket)
@@ -56,6 +52,7 @@ silently drop every pre-existing index row from candidacy).
 
 from __future__ import annotations
 
+import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,22 +61,27 @@ from pyspark.sql import types as T
 
 from cdc_data_lake_pyspark_spark.operators.dedup_text import (
     MinHashIndex,
+    _append_signatures,
     _banded,
     _estimate_candidates,
     _estimate_filter,
     _pruned_index_buckets,
-    _swap_compact_store,
     minhash_signatures,
 )
 from cdc_data_lake_pyspark_spark.store import (
+    MANIFEST_SCHEMA,
+    commit,
+    committed,
+    compact_store,
     read_store,
     recover_halfswap,
     replace_store,
+    tag_writer,
+    without_writer,
 )
 
-#: signatures/buckets carry the batch_id that WROTE each row so a
-#: checkpoint replay can exclude exactly its own dead attempt's leaked
-#: rows (ADVICE r12 — precise replay-leak filter, not a doc_id guess)
+#: signatures/buckets carry the batch_id that WROTE each row
+#: (:func:`~cdc_data_lake_pyspark_spark.store.tag_writer`)
 SIG_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), True),
@@ -137,11 +139,6 @@ def _require_integral_id(df: DataFrame, id_col: str, ctx: str) -> None:
             "and silently drop every row"
         )
 
-#: processed-batch manifest — the O(1)-per-batch replay guard
-MANIFEST_SCHEMA = T.StructType(
-    [T.StructField("batch_id", T.LongType(), True)]
-)
-
 #: persisted gate layout (mirrors save_minhash_index's params dataset)
 PARAMS_SCHEMA = (
     "num_hashes INT, k INT, bands INT, rows_per_band INT, "
@@ -152,15 +149,14 @@ PARAMS_SCHEMA = (
 class StreamingNearDupGate:
     """``foreachBatch`` target maintaining the updating MinHash index.
 
-    Per micro-batch: replay-guard (processed-batch manifest, O(1)) →
+    Per micro-batch: skip a committed batch →
     batch signatures (one aggregate over batch text) → cross-index
     candidates (excluding index rows leaked by a dead replay of THIS
     batch_id) + within-batch candidates (``a.id < b.id``) → Broder
     estimate ≥ ``threshold`` drops the later document → append the
     batch's FRESH signatures/buckets (one representative per unique
     signature not already indexed — exact-signature re-crawls add
-    nothing, r16) and the survivors to the kept set → append the
-    manifest row."""
+    nothing, r16) and the survivors to the kept set → commit."""
 
     def __init__(
         self,
@@ -214,8 +210,6 @@ class StreamingNearDupGate:
         foreachBatch contract and the layout is immutable after the
         first write, so a per-batch re-read would only add a fixed
         ~0.5 s to every micro-batch — measured in the r13 gate soak)."""
-        import os
-
         if self._params_validated:
             return
         d = f"{self.index_dir}/params"
@@ -253,8 +247,6 @@ class StreamingNearDupGate:
         self._params_validated = True
 
     def _has_data_stores(self) -> bool:
-        import os
-
         return any(
             os.path.isdir(f"{self.index_dir}/{s}")
             for s in ("signatures", "buckets")
@@ -302,29 +294,18 @@ class StreamingNearDupGate:
         """Current index over every SEEN document (empty-typed frames
         before the first batch), as the same :class:`MinHashIndex`
         artifact the batch save/load lifecycle uses (writer batch_id
-        dropped).  ``exclude_batch_id`` filters out rows WRITTEN BY that
-        batch — the replay-leak exclusion: under a crash-between-writes
-        replay the dead attempt's own appends are in the store, and
-        without the filter every batch doc would drop as a jaccard-1.0
-        near-dup of its own leaked signature.  Scoped to the writing
-        batch (not the doc_id), a legitimately re-delivered id in a
-        LATER batch is still compared against its earlier copy, and
-        id collisions never mask true near-dups (ADVICE r12).  The
-        equality filter pushes into both parquet scans."""
+        dropped).  ``exclude_batch_id`` drops the rows that batch wrote
+        (:func:`~cdc_data_lake_pyspark_spark.store.without_writer`):
+        without it, a replayed batch's docs would drop as jaccard-1.0
+        near-dups of their own leaked signatures.  Scoped to the writing
+        batch, not the doc_id, so a re-delivered id in a LATER batch is
+        still compared against its earlier copy (ADVICE r12)."""
         self._check_params(spark)
         sigs = self._read(spark, "signatures", SIG_SCHEMA)
         buckets = self._read(spark, "buckets", self._bucket_schema())
         if exclude_batch_id is not None:
-            # null-SAFE inequality: a store seeded directly from
-            # save_minhash_index (the batch artifact layout, no writer
-            # batch_id — the test_incremental_stream.py composition) reads
-            # batch_id as NULL; those rows are pre-stream history and must
-            # stay candidates, never be mistaken for replay leaks
-            excl = ~F.col("batch_id").eqNullSafe(
-                F.lit(exclude_batch_id).cast("long")
-            )
-            sigs = sigs.filter(excl)
-            buckets = buckets.filter(excl)
+            sigs = without_writer(sigs, exclude_batch_id)
+            buckets = without_writer(buckets, exclude_batch_id)
         return MinHashIndex(
             sigs.drop("batch_id"),
             buckets.drop("batch_id"),
@@ -337,11 +318,8 @@ class StreamingNearDupGate:
 
     def kept_docs(self, spark: SparkSession) -> DataFrame:
         """Gate output so far: ``(doc_id, batch_id)`` of every document
-        that had no earlier near-duplicate when it arrived.  Distinct:
-        a batch that crashed after its kept append but before its
-        manifest row is re-run by the replay guard and re-appends the
-        identical rows (same batch_id under checkpoint replay) — the
-        fold here is what makes that crash window harmless."""
+        that had no earlier near-duplicate when it arrived; distinct
+        folds the rows a replayed batch appends twice."""
         return self._read(spark, "kept", KEPT_SCHEMA).distinct()
 
     # -- maintenance --------------------------------------------------------
@@ -360,7 +338,7 @@ class StreamingNearDupGate:
         Run OFFLINE — between micro-batches, like any store rewrite
         (the gate is single-writer by the foreachBatch contract).  The
         swap is crash-RECOVERABLE rather than atomic
-        (:func:`~cdc_data_lake_pyspark_spark.operators.dedup_text._swap_compact_store`):
+        (:func:`~cdc_data_lake_pyspark_spark.store.compact_store`):
         the old store is parked at ``<sub>__old`` until the compacted
         one is in place, and BOTH this method and every ``_read`` repair
         a half-finished swap before touching the store — so a crash
@@ -376,7 +354,7 @@ class StreamingNearDupGate:
             ("kept", KEPT_SCHEMA, None),
             ("batches", MANIFEST_SCHEMA, None),
         ):
-            _swap_compact_store(
+            compact_store(
                 spark,
                 f"{self.index_dir}/{sub}",
                 schema,
@@ -456,40 +434,16 @@ class StreamingNearDupGate:
             batch_df, self.id_col, "StreamingNearDupGate.process_batch"
         )
         spark = batch_df.sparkSession
-        # replay guard: a processed-batch MANIFEST, not an id-level
-        # anti-join against the full signature store (VERDICT r11 #2 —
-        # the old guard re-scanned the whole corpus every micro-batch;
-        # this one reads a (batch_id) dataset whose size tracks the
-        # NUMBER OF BATCHES, with the equality pushed into the parquet
-        # scan).  foreachBatch replays a failed batch under the SAME
-        # batch_id (the Structured Streaming contract), so presence in
-        # the manifest means every write below landed.
-        done = self._read(spark, "batches", MANIFEST_SCHEMA)
-        if not done.filter(F.col("batch_id") == batch_id).isEmpty():
+        if committed(spark, f"{self.index_dir}/batches", batch_id):
             return
         # persist the layout before the first data append so every later
         # construction over this store is validated (ADVICE r12).  Only
         # a FRESH store (no data directories yet) takes the constructor
-        # layout — params-less data is a pre-params (or foreign) store
-        # whose true layout is unknown, and blessing the constructor's
-        # guess would be the exact silent failure the check prevents;
-        # the operator migrates explicitly via adopt_store().
-        import os
-
+        # layout: _check_params refuses params-less data, whose true
+        # layout is unknown (the operator migrates via adopt_store()).
+        self._check_params(spark)
         if not os.path.isdir(f"{self.index_dir}/params"):
-            if self._has_data_stores():
-                raise ValueError(
-                    f"near-dup gate store at {self.index_dir} has data "
-                    "but no params/ — it predates the persisted layout "
-                    "(or was not written by this gate).  If the "
-                    "constructor layout matches how it was written, "
-                    "migrate once with gate.adopt_store(spark)."
-                )
             self._write_params(spark)
-        # the replay-leak exclusion: index rows WRITTEN BY this batch_id
-        # (a dead attempt's leaked appends) are excluded from candidacy,
-        # so the re-run reproduces the original verdicts.  In normal
-        # operation the filter matches nothing.
         index = self.index(spark, exclude_batch_id=batch_id)
         novel, bsigs, verdicts = self._reduce(batch_df, index)
         # eager-stage the batch artifacts so the three appends share one
@@ -520,9 +474,7 @@ class StreamingNearDupGate:
         # identical — identical sigs share every band bucket, so the
         # twin is always a candidate): zero extra store scans.  The
         # within-batch pair direction keeps the earliest sibling as
-        # the representative; a replay excludes its own leaked rows
-        # from candidacy, recomputes the same append set, and its
-        # re-appended rows fold downstream like every duplicate row.
+        # the representative.
         append_sigs = bsigs.join(
             verdicts.filter(F.col("jaccard") >= 1.0).select(
                 F.col("batch_id").alias("doc_id")
@@ -530,46 +482,8 @@ class StreamingNearDupGate:
             "doc_id",
             "left_anti",
         ).localCheckpoint()
-        # The manifest row is written LAST: a batch that dies
-        # mid-sequence is absent from batches/, so the replay re-runs it
-        # in full.  The dead attempt's partial appends are harmless by
-        # construction — the replay's candidate discovery excludes rows
-        # carrying its own batch_id (above), so the re-run reproduces
-        # the original verdicts; duplicate kept rows carry the same
-        # (doc_id, batch_id) and fold in kept_docs()'s distinct;
-        # duplicate bucket rows fold in candidate discovery's distinct;
-        # duplicate signature rows only duplicate future candidate
-        # PAIRS, which fold in batch_reduce's dropped.distinct() (and
-        # add identical estimate rows to minhash_probe output); orphan
-        # bucket rows (bucket write landed, crash before signatures)
-        # cannot flip verdicts: their estimate join finds no signature
-        # row and drops the pair.
-        novel.withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        ).write.mode("append").parquet(f"{self.index_dir}/kept")
-        bban_out = _banded(
-            append_sigs, self.bands, self.rows_per_band
-        ).withColumn("batch_id", F.lit(batch_id).cast("long"))
-        if self.bucket_partitions > 0:
-            bban_out.withColumn(
-                "_pfx",
-                F.pmod(
-                    F.col("bucket"), F.lit(self.bucket_partitions)
-                ).cast("int"),
-            ).write.mode("append").partitionBy("_pfx").parquet(
-                f"{self.index_dir}/buckets"
-            )
-        else:
-            bban_out.write.mode("append").parquet(
-                f"{self.index_dir}/buckets"
-            )
-        append_sigs.withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        ).write.mode("append").parquet(f"{self.index_dir}/signatures")
-        from cdc_data_lake_pyspark_spark.localrel import tiny_frame
-
-        tiny_frame(
-            spark, [(int(batch_id),)], MANIFEST_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(
-            f"{self.index_dir}/batches"
+        tag_writer(novel, batch_id).write.mode("append").parquet(
+            f"{self.index_dir}/kept"
         )
+        _append_signatures(self.index_dir, append_sigs, index, batch_id)
+        commit(spark, f"{self.index_dir}/batches", batch_id)

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cdc_data_lake_pyspark_spark.store import read_store
+from cdc_data_lake_pyspark_spark.store import read_store, tag_writer
 
 INDEX_SCHEMA = T.StructType(
     [
@@ -179,7 +179,7 @@ class StreamingNoveltyGate:
                 depth=self.bloom_depth,
                 m_bits=self.bloom_m_bits,
             ).write.mode("append").parquet(self.bloom_dir)
-        novel = novel.withColumn("batch_id", F.lit(batch_id).cast("long"))
+        novel = tag_writer(novel, batch_id)
         # Append commits atomically (FileOutputCommitter); a replayed batch
         # re-derives `novel` as empty because its fps are now present.
         novel.write.mode("append").parquet(self.index_dir)

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_data_lake_pyspark_spark.operators.classifier import nb_score
-from cdc_data_lake_pyspark_spark.store import read_store
+from cdc_data_lake_pyspark_spark.store import read_store, tag_writer
 
 
 class StreamingQualityGate:
@@ -93,9 +93,7 @@ class StreamingQualityGate:
         return batch_df.join(scores, self.id_col)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int = -1) -> None:
-        scored = self.batch_reduce(batch_df).withColumn(
-            "_batch_id", F.lit(batch_id).cast("long")
-        )
+        scored = tag_writer(self.batch_reduce(batch_df), batch_id, "_batch_id")
         # both routes read one staged scoring pass
         scored = scored.localCheckpoint(eager=True)
         scored.filter(F.col("keep") == 1).drop("keep").write.mode(

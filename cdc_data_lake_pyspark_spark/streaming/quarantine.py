@@ -17,11 +17,10 @@ checkpoint) the clean path reads.
 
 Scale: validation is a map-only predicate; the quarantine store grows
 by appends of bad rows only.  Exactly-once: the wrapped target keeps
-its own idempotence story (MERGE-on-PK, novelty index, ...); quarantine
-appends on a replayed batch duplicate only quarantined rows, which the
-stamped ``batch_id`` deduplicates at read time
-(``read_quarantine(...).dropDuplicates([id..., "batch_id"])`` — or
-exactly, since a replay writes the same (row, batch_id) pairs).
+its own idempotence story (MERGE-on-PK, novelty index, ...).  The bad
+rows are appended BEFORE the target runs, so a batch whose target
+fails appends them again on replay, under the same ``_batch_id``;
+:func:`read_quarantine` folds those copies with a distinct.
 """
 
 from __future__ import annotations
@@ -31,7 +30,7 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cdc_data_lake_pyspark_spark.store import read_store
+from cdc_data_lake_pyspark_spark.store import read_store, tag_writer
 
 
 def with_quarantine(
@@ -61,11 +60,11 @@ def with_quarantine(
         )
         labeled = staged.withColumn("_viol", labels)
         bad = labeled.filter(F.size("_viol") > 0).select(
-            *staged.columns,
-            F.array_join("_viol", ",").alias("_violations"),
-            F.lit(batch_id).cast("long").alias("_batch_id"),
+            *staged.columns, F.array_join("_viol", ",").alias("_violations")
         )
-        bad.write.mode("append").parquet(quarantine_dir)
+        tag_writer(bad, batch_id, "_batch_id").write.mode("append").parquet(
+            quarantine_dir
+        )
         clean = labeled.filter(F.size("_viol") == 0).select(*staged.columns)
         process(clean, batch_id)
 
@@ -74,7 +73,10 @@ def with_quarantine(
 
 def read_quarantine(spark, quarantine_dir: str) -> DataFrame:
     """Quarantined rows so far (an absent store reads as empty; the
-    columns are the quarantined stream's own, so the read is untyped)."""
+    columns are the quarantined stream's own, so the read is untyped).
+    Distinct: a replayed batch re-appends the same ``(row, _batch_id)``
+    rows, so exact duplicates fold — two identical bad rows in one batch
+    also read once."""
     return read_store(
         spark, quarantine_dir, "_violations string, _batch_id long", typed=False
-    )
+    ).distinct()

@@ -15,6 +15,11 @@ quarantine) on top of it.
 Exactly-once story (same as reference): source offsets + checkpoint give
 at-least-once batch replay; MERGE-on-PK application converges on replay,
 appends are the non-idempotent edge (documented, as in the reference).
+The streaming gates close that edge for their own stores with
+:mod:`~cdc_data_lake_pyspark_spark.store`'s batch-commit rule; the CDC
+sinks do not yet, because direct callers of ``CdcPipeline.process_batch``
+reuse its default ``batch_id=0`` across batches, and a marker keyed on
+the batch id would silently skip every batch after their first.
 """
 
 from __future__ import annotations

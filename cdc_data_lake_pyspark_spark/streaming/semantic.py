@@ -48,7 +48,7 @@ from cdc_data_lake_pyspark_spark.operators.similarity import (
     cosine_pandas_udf,
     make_hyperplanes,
 )
-from cdc_data_lake_pyspark_spark.store import read_store
+from cdc_data_lake_pyspark_spark.store import read_store, tag_writer
 
 INDEX_SCHEMA = T.StructType(
     [
@@ -200,10 +200,6 @@ class StreamingSemanticGate:
 
         # 3) append novel rows, exploded per (table, bucket)
         out = self._with_buckets(novel, "vec_id", "v").select(
-            "tbl",
-            "bkt",
-            F.col("vec_id").cast("long"),
-            "v",
-            F.lit(batch_id).cast("long").alias("batch_id"),
+            "tbl", "bkt", F.col("vec_id").cast("long"), "v"
         )
-        out.write.mode("append").parquet(self.index_dir)
+        tag_writer(out, batch_id).write.mode("append").parquet(self.index_dir)

@@ -91,3 +91,28 @@ def test_envelope_checks_label_json_null_literal(spark, tmp_path):
         5: "null_or_empty_value",
         6: "null_or_empty_value",
     }
+
+
+def test_replayed_batch_reads_one_quarantine_copy(spark, tmp_path):
+    """The bad rows are appended before the wrapped target runs, so a
+    target that fails makes the replay append them again; the reader
+    returns one copy."""
+    qdir = str(tmp_path / "dlq_replay")
+    calls = []
+
+    def target(df, batch_id):
+        calls.append(batch_id)
+        if len(calls) == 1:
+            raise RuntimeError("target failed")
+
+    gate = with_quarantine(target, [("v_neg", F.col("v") < 0)], qdir)
+    batch = spark.createDataFrame(
+        [(1, 5.0), (2, -1.0), (3, -2.0)], "id long, v double"
+    )
+    try:
+        gate(batch, batch_id=4)
+    except RuntimeError:
+        pass
+    gate(batch, batch_id=4)  # the replay
+    assert calls == [4, 4]
+    assert read_quarantine(spark, qdir).count() == 2

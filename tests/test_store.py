@@ -101,3 +101,52 @@ def test_absent_store_reads_empty(spark, tmp_path, name):
     df = read(spark, str(tmp_path))
     assert _fields(df.schema) == _fields(schema)
     assert df.count() == 0
+
+
+# -- the batch-commit rule ----------------------------------------------------
+
+
+def test_commit_marks_only_its_batch(spark, tmp_path):
+    from cdc_data_lake_pyspark_spark.store import commit, committed, markers
+
+    d = str(tmp_path / "batches")
+    assert not committed(spark, d, 0)  # absent store: nothing committed
+    commit(spark, d, 3)
+    assert committed(spark, d, 3)
+    assert not committed(spark, d, 0)
+    # the daily loop's day marker: an INT key plus BIGINT extras
+    days = str(tmp_path / "days")
+    commit(spark, days, 1, "_day", _fp=-7, _rows=40)
+    assert committed(spark, days, 1, "_day")
+    rows = markers(spark, days, "_day", ("_fp", "_rows")).collect()
+    assert [tuple(r) for r in rows] == [(1, -7, 40)]
+    assert dict(spark.read.parquet(days).dtypes) == {
+        "_day": "int",
+        "_fp": "bigint",
+        "_rows": "bigint",
+    }
+
+
+def test_corrupt_marker_store_raises(spark, tmp_path):
+    from cdc_data_lake_pyspark_spark.store import committed
+
+    store = tmp_path / "batches"
+    store.mkdir()
+    (store / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises((PySparkException, Py4JJavaError)):
+        committed(spark, str(store), 0)
+
+
+def test_writer_filter_keeps_untagged_rows(spark):
+    from cdc_data_lake_pyspark_spark.localrel import tiny_frame
+    from cdc_data_lake_pyspark_spark.store import tag_writer, without_writer
+
+    history = tiny_frame(spark, [(1, None), (2, None)], "doc_id long, batch_id long")
+    rows = history.unionByName(
+        tag_writer(tiny_frame(spark, [(3,)], "doc_id long"), 5)
+    ).unionByName(tag_writer(tiny_frame(spark, [(4,)], "doc_id long"), 6))
+    kept = {r.doc_id for r in without_writer(rows, 5).collect()}
+    assert kept == {1, 2, 4}
+    days = tag_writer(tiny_frame(spark, [(1,)], "doc_id long"), 2, "_day")
+    assert dict(days.dtypes)["_day"] == "int"
+    assert without_writer(days, 2, "_day").count() == 0
