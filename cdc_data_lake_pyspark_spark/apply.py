@@ -22,17 +22,25 @@ Spark-first design: merge/delete are pure DataFrame transforms —
     merged  = updates ∪ (target ⟕anti updates on keys)
     deleted = target ⟕anti deletes on keys
 
-not a full-outer join with per-column coalesce.  As measured, the merge
-SHUFFLES THE TARGET on the PK even when the update side is small: AQE
-does not turn the anti-join into a broadcast in time (cdcbench
-``fanout_many_tables``: about 5.5 MB shuffle write per batch; 0.57 MB
-with an explicit broadcast of the key side).  :class:`FrameTableSink`
-applies these transforms for the in-memory and parquet sinks;
-:class:`SqlTableSink` runs the generated Iceberg/Delta SQL text instead.
+not a full-outer join with per-column coalesce.  In a pipeline batch
+:meth:`FrameTableSink.apply_batch` composes them into ONE plan per table
+over the target T, the inserts I, the deduped upserts U and the delete
+keys D:
+
+    ((T ∪ I) ⟕anti (U keys ∪ D keys)) ∪ (U ⟕anti D keys)
+
+with both key sets broadcast, so T is read once, never shuffled, and
+written once.  The only shuffle left is U's dedup (cdcbench
+``fanout_many_tables``: 0.55 MB shuffle write per batch; 5.5 MB when the
+merge and delete ran as statements and AQE left the merge's anti-join a
+shuffle join).  :class:`FrameTableSink` applies these transforms for the
+in-memory and parquet sinks; :class:`SqlTableSink` runs the generated
+Iceberg/Delta SQL text, one statement per route, instead.
 """
 
 from __future__ import annotations
 
+import functools
 import itertools
 import logging
 import os
@@ -260,6 +268,11 @@ def build_create_table_sql(
 class TableSink:
     """Minimal sink protocol the pipeline drives.
 
+    The pipeline hands each table's batch to :meth:`apply_batch` once and
+    then calls :meth:`flush`.  The default :meth:`apply_batch` is the
+    reference's three statements in order — ``append``, ``merge``,
+    ``delete`` — and is the semantics any override must keep.
+
     Implementations must make ``append``/``merge``/``delete`` idempotent at
     the batch level where possible (merge-on-PK re-application converges,
     which is the reference's exactly-once story — SURVEY §2.5).
@@ -293,6 +306,33 @@ class TableSink:
         at-or-before the delete's timestamp are removed."""
         raise NotImplementedError
 
+    def apply_batch(
+        self,
+        cfg: TableConfig,
+        inserts: Optional[DataFrame] = None,
+        upserts: Optional[DataFrame] = None,
+        deletes: Optional[DataFrame] = None,
+        ts_guard: Optional[str] = None,
+        upsert_keys: Optional[DataFrame] = None,
+    ) -> None:
+        """Apply one table's batch: append ``inserts``, merge ``upserts``
+        (unique per key), then delete the keys in ``deletes`` — the
+        reference's order (``transaction_log_util.py:78-168``).  Any frame
+        may be ``None``.  With ``ts_guard``, ``upserts`` and ``deletes``
+        carry the guard column and the merge and delete are guarded.
+
+        ``upsert_keys`` optionally holds the key columns of the upserts
+        before their dedup: the same key set as ``upserts``, duplicates
+        allowed.  A fused plan takes its key set from it instead of
+        aggregating ``upserts`` a second time; the statements ignore it."""
+        guard = {"ts_guard": ts_guard} if ts_guard else {}
+        if inserts is not None:
+            self.append(cfg, inserts)
+        if upserts is not None:
+            self.merge(cfg, upserts, **guard)
+        if deletes is not None:
+            self.delete(cfg, deletes, **guard)
+
     def flush(self, cfg: TableConfig) -> None:
         """Called once per table at the end of a batch, after all of that
         batch's mutations.  Sinks that write eagerly (files, catalogs)
@@ -311,10 +351,12 @@ class TableSink:
 class FrameTableSink(TableSink):
     """The apply step written once as frame transforms: append with schema
     evolution (S4), merge via :func:`merge_into` (J1), delete via
-    :func:`delete_matching` (J2).  Subclasses supply only storage —
+    :func:`delete_matching` (J2), and :meth:`apply_batch`, which fuses a
+    table's whole batch into one plan.  Subclasses supply only storage —
     :meth:`exists`, :meth:`read`, :meth:`_save` and :meth:`flush`.  Each op
-    reads the base table at most once; a missing table is saved straight
-    from the incoming frame, with no empty table written first.
+    reads the base table at most once and saves it once; a missing table
+    is saved straight from the incoming frame, with no empty table written
+    first.
     """
 
     def _save(self, cfg: TableConfig, df: DataFrame, add: bool = False) -> None:
@@ -366,6 +408,78 @@ class FrameTableSink(TableSink):
             )
 
         self._guard("delete", _do)
+
+    def apply_batch(
+        self, cfg, inserts=None, upserts=None, deletes=None, ts_guard=None, upsert_keys=None
+    ):
+        """The batch as one plan over the table T, the inserts I, the
+        upserts U and the delete keys D:
+
+            ((T ∪ I) ⟕anti (U keys ∪ D keys)) ∪ (U ⟕anti D keys)
+
+        — what append, merge and delete leave, from one read of T and one
+        save.  Both key sets are broadcast (a key set is bounded by the
+        micro-batch), so T is never shuffled.  U's keys come from
+        ``upsert_keys``, the parsed keys before the dedup, so the dedup's
+        shuffle is planned once and the key set needs no shuffle of its
+        own; without them they are a projection of U.  A guarded
+        batch keeps the sequential composition, and an insert-only batch
+        keeps the eager append, which adds rows without a rewrite.  The
+        batch is one action for ``continue_on_error``: a failure leaves
+        the table as it was.
+        """
+        if ts_guard is not None or (upserts is None and deletes is None):
+            return super().apply_batch(cfg, inserts, upserts, deletes, ts_guard)
+        keys = list(cfg.primary_keys)
+
+        def _do():
+            if self.exists(cfg.db, cfg.table):
+                spark = (upserts if upserts is not None else deletes).sparkSession
+                base = self.read(spark, cfg.db, cfg.table)
+            elif inserts is None and upserts is None:
+                return  # nothing to delete from
+            else:
+                base = None
+            writes = [f for f in (base, inserts, upserts) if f is not None]
+            schema = functools.reduce(merge_schemas, [f.schema for f in writes])
+            kept = [align_to_schema(f, schema) for f in (base, inserts) if f is not None]
+            d_keys = [] if deletes is None else [_typed_keys(deletes, keys, schema)]
+            parts = []
+            if upserts is not None:
+                upserts_ = align_to_schema(upserts, schema)
+                if kept:
+                    parsed = upsert_keys if upsert_keys is not None else upserts
+                    u_keys = [_typed_keys(parsed, keys, schema)]
+                    parts.append(_without_keys(_union(kept), u_keys + d_keys, keys))
+                parts.append(_without_keys(upserts_, d_keys, keys))
+            else:
+                parts.append(_without_keys(_union(kept), d_keys, keys))
+            # the column order the sequential ops leave: a delete's
+            # anti-join puts the keys first
+            names = schema.names
+            if deletes is not None:
+                names = keys + [c for c in names if c not in keys]
+            self._save(cfg, _union(parts).select(*names))
+
+        self._guard("apply_batch", _do)
+
+
+def _typed_keys(df: DataFrame, keys, schema: T.StructType) -> DataFrame:
+    """``df``'s key columns at the table's key types, so key sets union
+    cleanly (``try_cast``, as :func:`align_to_schema` casts)."""
+    return df.select(*[F.col(k).try_cast(schema[k].dataType).alias(k) for k in keys])
+
+
+def _union(frames: Sequence[DataFrame]) -> DataFrame:
+    return functools.reduce(DataFrame.unionByName, frames)
+
+
+def _without_keys(df: DataFrame, key_sets: Sequence[DataFrame], keys) -> DataFrame:
+    """``df`` minus the rows whose key is in any of ``key_sets``, against
+    one broadcast key set."""
+    if not key_sets:
+        return df
+    return df.join(F.broadcast(_union(key_sets)), on=keys, how="left_anti")
 
 
 class MemoryTableSink(FrameTableSink):
@@ -540,11 +654,23 @@ class ParquetTableSink(FrameTableSink):
     rule: direct callers of ``CdcPipeline.process_batch`` reuse its
     default ``batch_id=0`` across batches, so a marker keyed on the
     batch id would silently skip every batch after their first.
+
+    Schema cache: each save records the schema it wrote with the table
+    directory's ``(st_ino, st_mtime_ns)`` right after the write, and
+    :meth:`read` passes that schema to ``spark.read.schema(...)``, which
+    runs no footer-reading job (a file source reads every column as
+    nullable, as a footer read does).  The cache is trusted only while
+    the directory still carries that stamp: a swap by any writer installs
+    a new directory and an added file moves the mtime, so after a
+    restart, another writer's write or a half-swap repair the footer is
+    read as before.
     """
 
     def __init__(self, root: str, continue_on_error: bool = False):
         self.root = root
         self.continue_on_error = continue_on_error
+        # path -> (directory stamp right after this sink's write, schema)
+        self._schemas: dict[str, tuple[tuple[int, int], T.StructType]] = {}
 
     def _path(self, db: str, table: str) -> str:
         return os.path.join(self.root, db, table)
@@ -557,6 +683,10 @@ class ParquetTableSink(FrameTableSink):
     def read(self, spark, db, table):
         path = self._path(db, table)
         recover_halfswap(path)
+        cached = self._schemas.get(path)
+        if cached is not None and cached[0] == _stamp(path):
+            # the table is as this sink left it: no footer-reading job
+            return spark.read.schema(cached[1]).parquet(path)
         return spark.read.parquet(path)
 
     def _save(self, cfg, df, add=False):
@@ -566,6 +696,7 @@ class ParquetTableSink(FrameTableSink):
         else:
             # copy-on-write without self-read hazard: write beside, then swap
             replace_store(path, df.write.mode("overwrite").parquet)
+        self._schemas[path] = (_stamp(path), df.schema)
 
     def compact(self, db: str, table: str, target_files: int = 1) -> int:
         """Rewrite the table into ``target_files`` files and return the
@@ -578,10 +709,22 @@ class ParquetTableSink(FrameTableSink):
             return 0
         path = self._path(db, table)
         before = _parquet_files(path)
-        df = SparkSession.getActiveSession().read.parquet(path).coalesce(target_files)
+        df = self.read(SparkSession.getActiveSession(), db, table).coalesce(target_files)
         replace_store(path, df.write.mode("overwrite").parquet)
+        self._schemas[path] = (_stamp(path), df.schema)
         return max(before - _parquet_files(path), 0)
 
 
 def _parquet_files(path: str) -> int:
     return sum(f.endswith(".parquet") for f in os.listdir(path))
+
+
+def _stamp(path: str) -> Optional[tuple[int, int]]:
+    """Identity of a table directory's current contents (``None``: no
+    directory): a swap installs a new directory (new inode) and adding
+    files changes its mtime."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return st.st_ino, st.st_mtime_ns

@@ -68,9 +68,13 @@ def latest_change_per_key(
         raise ValueError(f"unknown dedup method: {method!r}")
     payload = F.struct(*[F.col(c) for c in df.columns]).alias("_row")
     ordering = F.struct(*[F.col(c) for c in order_by])
-    deduped = (
+    # the keys come from the grouping columns, not from the winning row:
+    # a projection of the keys alone then prunes to a keys-only aggregate
+    # instead of planning the whole dedup a second time
+    return (
         df.groupBy(*[F.col(k) for k in keys])
         .agg(F.max_by(payload, ordering).alias("_row"))
-        .select("_row.*")
+        .select(
+            *[F.col(c) if c in keys else F.col("_row").getField(c).alias(c) for c in df.columns]
+        )
     )
-    return deduped

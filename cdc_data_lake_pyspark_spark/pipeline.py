@@ -11,16 +11,19 @@ library:
 * empty-batch short-circuit (``isEmpty()``, ``:56,86,115,150``);
 * single driver round-trip for the (db, table, route) inventory instead of
   the reference's per-route distinct/collect/first storm (SURVEY §4.2.1);
-* per-table: payload schema (inferred over the whole slice, or the sink's
-  authoritative schema for upserts — ``:138-145``), timestamp-field casts
-  (``:195-200``), PK dedup (``:267-273``), then append / merge / delete via
-  the sink.
+* per-table: the target's schema read once, payload schema (inferred over
+  the whole slice, or the sink's authoritative schema for upserts —
+  ``:138-145``), timestamp-field casts (``:195-200``), PK dedup
+  (``:267-273``), then ONE ``TableSink.apply_batch`` call with the
+  table's inserts, upserts and delete keys, and a ``flush``.
 
 Delete-route key extraction parses the ``before`` image
 (``transaction_log_util.py:161-167``) and projects only the PK columns.
 
 Order of application within a batch follows the reference: inserts, then
-upserts, then deletes (``transaction_log_util.py:78-168``).
+upserts, then deletes (``transaction_log_util.py:78-168``).  That order is
+``apply_batch``'s contract: the default runs the three statements in it,
+and the DataFrame sinks fuse them into one plan with the same result.
 """
 
 from __future__ import annotations
@@ -69,7 +72,8 @@ class CdcPipeline:
     Parameters
     ----------
     config : per-table config (tables.json shape) — see ``config.py``
-    sink : TableSink receiving append/merge/delete
+    sink : TableSink receiving one ``apply_batch`` and one ``flush`` per
+        table per batch
     cdc_format : 'debezium' | 'dms'
     ts_guard : optional column name for the cross-batch out-of-order merge
         guard (``None`` reproduces reference behavior; ``'_cdc_ts_ms'``
@@ -142,24 +146,40 @@ class CdcPipeline:
             routed.unpersist()
 
     def _apply_table(self, entry, routed: DataFrame) -> None:
-        """Apply one table's routes (insert → upsert → delete, the
-        reference's order) and flush — the unit of per-table parallelism;
-        within a table everything stays sequential."""
+        """Apply one table's routes as one sink call and flush — the unit
+        of per-table parallelism.  The target's schema is read once; each
+        route's frame evolves it in the reference's order (insert →
+        upsert → delete), so the upserts align to the inserts' columns and
+        the delete keys take the types the table will have."""
         cfg = self.config.get(entry.db, entry.table)
         tbl = slice_table(routed, entry.db, entry.table)
+        schema = None
+        if self.sink.exists(cfg.db, cfg.table):
+            schema = self.sink.read(routed.sparkSession, cfg.db, cfg.table).schema
+        routes = {}
         if ROUTE_INSERT in entry.routes:
-            self._apply_insert(cfg, tbl)
+            routes["inserts"] = self._inserts(cfg, tbl)
+            schema = _evolve(schema, routes["inserts"].schema)
         if ROUTE_UPSERT in entry.routes:
-            self._apply_upsert(cfg, tbl)
+            routes["upserts"], routes["upsert_keys"] = self._upserts(cfg, tbl, schema)
+            schema = _evolve(schema, routes["upserts"].schema)
         if ROUTE_DELETE in entry.routes:
-            self._apply_delete(cfg, tbl)
+            if schema is None:
+                # nothing to delete from — and catalog sinks can't run
+                # DELETE against a missing table
+                logger.info("delete skipped (no table): %s", cfg.qualified_name)
+            else:
+                routes["deletes"] = self._delete_keys(cfg, tbl, schema)
+        if routes:
+            self.sink.apply_batch(cfg, ts_guard=self.ts_guard, **routes)
+            logger.info("batch applied: %s", cfg.qualified_name)
         # one materialization point per table per batch (lazy sinks
         # checkpoint here, while the batch cache is still alive)
         self.sink.flush(cfg)
 
-    # -- route appliers -------------------------------------------------
+    # -- route frames ---------------------------------------------------
 
-    def _apply_insert(self, cfg, tbl: DataFrame) -> None:
+    def _inserts(self, cfg, tbl: DataFrame) -> DataFrame:
         sliced = tbl.filter(F.col("route") == ROUTE_INSERT)
         keep = ["ts_ms"] if self.ts_guard else []
         # ONE distributed JSON pass: fused infer+parse, with the envelope
@@ -168,12 +188,13 @@ class CdcPipeline:
         payload = cast_timestamp_fields(payload, cfg.timestamp_fields)
         if self.ts_guard:
             payload = payload.withColumnRenamed("ts_ms", self.ts_guard)
-        self.sink.append(cfg, payload)
-        logger.info("insert applied: %s", cfg.qualified_name)
+        return payload
 
-    def _apply_upsert(self, cfg, tbl: DataFrame) -> None:
+    def _upserts(self, cfg, tbl: DataFrame, schema) -> tuple[DataFrame, DataFrame]:
+        """The upsert route, latest change per key, and its keys before
+        the dedup.  ``schema`` is the table's as this batch's inserts leave
+        it (``None``: no table)."""
         sliced = tbl.filter(F.col("route") == ROUTE_UPSERT)
-        spark = tbl.sparkSession
         # ONE JSON pass: fused infer+parse with ts_ms carried through.
         # When the target exists, its schema stays authoritative for
         # existing columns (reference REFRESH TABLE + spark.table().schema,
@@ -181,10 +202,9 @@ class CdcPipeline:
         # columns first appearing in an update still evolve (the
         # reference's MERGE path silently drops them — SURVEY §1.3/§8).
         payload = infer_and_parse_json(sliced, "after", keep_cols=["ts_ms"])
-        if self.sink.exists(cfg.db, cfg.table):
-            target_schema = self.sink.read(spark, cfg.db, cfg.table).schema
+        if schema is not None:
             evolved = merge_schemas(
-                _strip_fields(target_schema, {self.ts_guard, "ts_ms"}),
+                _strip_fields(schema, {self.ts_guard, "ts_ms"}),
                 _strip_fields(payload.schema, {"ts_ms"}),
             )
             payload = align_to_schema(payload, evolved)
@@ -204,56 +224,41 @@ class CdcPipeline:
                     cfg.qualified_name,
                 )
         deduped = latest_change_per_key(payload, cfg.primary_keys, order_by=order_by)
+        keys = payload.select(*cfg.primary_keys)
         if self.ts_guard:
-            deduped = deduped.withColumnRenamed("ts_ms", self.ts_guard)
-        else:
-            # reference drops ts_ms before MERGE (:273)
-            deduped = deduped.drop("ts_ms")
-        # an upsert-only stream still creates the table: the sink's merge
-        # creates a missing one (the reference creates before MERGE,
-        # transaction_log_util.py:202-214)
-        self.sink.merge(
-            cfg, deduped, **({"ts_guard": self.ts_guard} if self.ts_guard else {})
-        )
-        logger.info("upsert applied: %s", cfg.qualified_name)
+            return deduped.withColumnRenamed("ts_ms", self.ts_guard), keys
+        # reference drops ts_ms before MERGE (:273)
+        return deduped.drop("ts_ms"), keys
 
-    def _apply_delete(self, cfg, tbl: DataFrame) -> None:
+    def _delete_keys(self, cfg, tbl: DataFrame, schema) -> DataFrame:
+        """The delete route's keys, typed by ``schema`` (the table's as
+        this batch's inserts and upserts leave it)."""
         sliced = tbl.filter(F.col("route") == ROUTE_DELETE)
-        # DELETE only needs the PK columns.  When the target exists its
-        # schema is authoritative for key types, so skip the whole-slice
-        # inference pass entirely and give from_json a PK-only schema —
-        # one narrow extraction instead of infer-everything +
+        # DELETE only needs the PK columns: give from_json a PK-only schema
+        # — one narrow extraction instead of infer-everything +
         # parse-everything (a full extra scan of the batch JSON at scale).
-        if not self.sink.exists(cfg.db, cfg.table):
-            # nothing to delete from — and catalog sinks can't run DELETE
-            # against a missing table
-            logger.info("delete skipped (no table): %s", cfg.qualified_name)
-            return
-        target_schema = self.sink.read(tbl.sparkSession, cfg.db, cfg.table).schema
-        pk_fields = [f for f in target_schema.fields if f.name in cfg.primary_keys]
+        pk_fields = [f for f in schema.fields if f.name in cfg.primary_keys]
         if len(pk_fields) == len(cfg.primary_keys):
-            schema = T.StructType(pk_fields)
+            pk_schema = T.StructType(pk_fields)
         else:
-            schema = infer_json_schema(sliced, "before")
-        payload = parse_payload(sliced, "before", schema, keep_cols=["ts_ms"])
-        # Only the PK columns matter for DELETE ... WHERE EXISTS; dedup to
-        # the latest per key first so delete-then-reinsert batches resolve
-        # by ts ordering at the route level (reference applies routes in
-        # insert→upsert→delete order; we keep that order).
+            pk_schema = infer_json_schema(sliced, "before")
+        if not self.ts_guard:
+            # a key set: duplicates and order don't change which rows a
+            # DELETE ... WHERE EXISTS removes
+            payload = parse_payload(sliced, "before", pk_schema)
+            return payload.select(*cfg.primary_keys)
+        # Guarded delete: the delete's envelope timestamp rides along and
+        # the sink removes only rows whose guard column is at or before it
+        # — a stale delete can't remove a newer image, either cross-batch
+        # or within this batch (inserts/upserts apply first, carrying
+        # their own guard values).
+        payload = parse_payload(sliced, "before", pk_schema, keep_cols=["ts_ms"])
         keys_df = latest_change_per_key(payload, cfg.primary_keys, order_by=["ts_ms"])
-        if self.ts_guard:
-            # Guarded delete: the delete's envelope timestamp rides along
-            # and the sink removes only rows whose guard column is at or
-            # before it — a stale delete can't remove a newer image, either
-            # cross-batch or within this batch (inserts/upserts apply
-            # first, carrying their own guard values).
-            keys_df = keys_df.select(
-                *cfg.primary_keys, F.col("ts_ms").alias(self.ts_guard)
-            )
-            self.sink.delete(cfg, keys_df, ts_guard=self.ts_guard)
-        else:
-            self.sink.delete(cfg, keys_df.select(*cfg.primary_keys))
-        logger.info("delete applied: %s", cfg.qualified_name)
+        return keys_df.select(*cfg.primary_keys, F.col("ts_ms").alias(self.ts_guard))
+
+
+def _evolve(schema, incoming):
+    return incoming if schema is None else merge_schemas(schema, incoming)
 
 
 def _strip_fields(schema, names):

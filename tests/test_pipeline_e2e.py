@@ -163,10 +163,10 @@ def test_parallel_apply_failure_is_contained(spark, caplog):
             super().__init__()
             self.fail_tables = set(fail_tables)
 
-        def merge(self, cfg, df, ts_guard=None):
+        def apply_batch(self, cfg, **routes):
             if cfg.table in self.fail_tables:
                 raise RuntimeError(f"boom:{cfg.table}")
-            return super().merge(cfg, df, ts_guard=ts_guard)
+            return super().apply_batch(cfg, **routes)
 
     tables = list("abcdef")
     cfg = [{"db": "d", "table": t, "primary_key": "id"} for t in tables]
