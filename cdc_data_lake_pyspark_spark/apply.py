@@ -325,13 +325,12 @@ class TableSink:
         before their dedup: the same key set as ``upserts``, duplicates
         allowed.  A fused plan takes its key set from it instead of
         aggregating ``upserts`` a second time; the statements ignore it."""
-        guard = {"ts_guard": ts_guard} if ts_guard else {}
         if inserts is not None:
             self.append(cfg, inserts)
         if upserts is not None:
-            self.merge(cfg, upserts, **guard)
+            self.merge(cfg, upserts, ts_guard=ts_guard)
         if deletes is not None:
-            self.delete(cfg, deletes, **guard)
+            self.delete(cfg, deletes, ts_guard=ts_guard)
 
     def flush(self, cfg: TableConfig) -> None:
         """Called once per table at the end of a batch, after all of that
